@@ -193,9 +193,6 @@ def run_kernel(spark, paths, tag: str, host_budget: int = 0, n_salts: int = 8) -
         multi_host=True,
         seeds=pages.select("url"),
         use_bloom=False,
-        # the mega-round touches every host — an isin prune of the pages
-        # scan would be a no-op probe job
-        host_prune=None,
         seeds_unique=True,  # seeds = the pages url column, unique by construction
         fetch_strategy="bucketed",
     )

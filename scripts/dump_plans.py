@@ -49,7 +49,7 @@ def main():
     ).limit(50000)
     rmap = resolve_redirects(redirects)
     fx = fetch_and_extract(frontier, pages, None, 0, True, True, "https://x",
-                           host_prune=None, strategy="broadcast")
+                           strategy="broadcast")
     sections.append(("Fetch join + vectorized extract, broadcast-batch strategy (J1 + H1/H2)",
                      "Pages scan must read ONLY (url, html); the batch (urls + scheduling "
                      "ints, never html) broadcasts into the scan, so the extract UDF runs "
@@ -57,7 +57,7 @@ def main():
                      "url-column-only anti-join.",
                      explain_str(fx)))
     fx_sh = fetch_and_extract(frontier, pages, None, 0, True, True, "https://x",
-                              host_prune=None, strategy="shuffle_hash")
+                              strategy="shuffle_hash")
     sections.append(("Fetch join, fat-round shuffle-hash strategy (batch > broadcast threshold)",
                      "Broadcast LEFT SEMI shrinks pages to the batch's url set (pages "
                      "streams once, no full-table shuffle); SHUFFLE_HASH for the html "
@@ -70,7 +70,7 @@ def main():
     )
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     fx_b = fetch_and_extract(frontier, pb, None, 0, True, True, "https://x",
-                             host_prune=None, strategy="bucketed")
+                             strategy="bucketed")
     sections.append(("Fetch join, bucketed co-located strategy (pages bucketed+sorted by url)",
                      "The 10^10-design-point plan: NO Exchange and NO BroadcastExchange on "
                      "the pages side — the merge join consumes the bucketed url-sorted scan "

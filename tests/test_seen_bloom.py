@@ -24,7 +24,11 @@ def test_bloom_no_false_negatives():
     assert all(b.contains(u) for u in added)
 
 
-def test_seen_anti_join_equals_exact_oracle(spark):
+@pytest.mark.parametrize("use_bloom", [True, False], ids=["bloom", "exact"])
+@pytest.mark.parametrize("broadcast", [False, True], ids=["shuffle", "broadcast"])
+def test_seen_anti_join_equals_exact_oracle(spark, use_bloom, broadcast):
+    # all four seen_anti_join branches: Bloom prefilter or not × seen side
+    # broadcast (exact row count given) or shuffled (count unknown)
     rng = random.Random(13)
     seen_urls = sorted(set(_urls(rng, 2500)))
     cand_urls = sorted(set(_urls(rng, 2500)))  # overlaps seen heavily
@@ -33,14 +37,25 @@ def test_seen_anti_join_equals_exact_oracle(spark):
         [(u, "h", 1, 1) for u in cand_urls],
         "url string, host string, depth int, link_count long",
     )
-    # undersized bloom → plenty of false positives, zero false negatives
-    bloom = BloomShards(n_shards=4, bits_per_shard=1 << 12, n_hashes=3)
-    bloom.add_urls_distributed(seen)
+    bloom = None
+    if use_bloom:
+        # undersized bloom → plenty of false positives, zero false negatives
+        bloom = BloomShards(n_shards=4, bits_per_shard=1 << 12, n_hashes=3)
+        bloom.add_urls_distributed(seen)
+    seen_rows = len(seen_urls) if broadcast else None
 
-    exact = {r["url"] for r in cands.join(seen, "url", "left_anti").collect()}
-    with_bloom = {r["url"] for r in seen_anti_join(cands, seen, bloom).collect()}
-    assert with_bloom == exact
-    assert exact == set(cand_urls) - set(seen_urls)
+    # without the size threshold Spark would broadcast this small seen
+    # side on its own; switched off, only the branch's hint broadcasts
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = seen_anti_join(cands, seen, bloom, seen_rows=seen_rows)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        got = {r["url"] for r in out.collect()}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert ("BroadcastHashJoin" in plan) == broadcast
+    assert got == set(cand_urls) - set(seen_urls)
 
 
 def test_bloom_split_semantics(spark):

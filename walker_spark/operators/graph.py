@@ -27,8 +27,6 @@ Scale shape per iteration (the standard distributed PageRank plan):
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -123,7 +121,7 @@ def pagerank(
 # Fuse only when BOTH are small; everything else keeps the original
 # checkpoint-per-iteration loop (constant plan size at any scale).
 _FUSE_MAX_ITERS = 6
-_FUSE_MAX_NODES = int(os.environ.get("WALKER_SPARK_PAGERANK_FUSE_MAX", "2000000"))
+_FUSE_MAX_NODES = 2_000_000
 
 
 def _pagerank_loop(ranks, vd, e_deg, n, iterations, damping):

@@ -26,8 +26,6 @@ unsalted counterfactual above the threshold.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -47,10 +45,7 @@ def _window_group_limit_threshold(spark) -> int:
     48M-row skew bench: with the rule active, a plain per-host window is
     skew-immune; above the threshold the hot host's full row set sorts
     on ONE reduce task and explicit salting becomes the defense."""
-    try:
-        return int(spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold"))
-    except Exception:
-        return 1000
+    return int(spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold"))
 
 
 # frontiers at or below this many rows pick the plain single-window
@@ -60,9 +55,7 @@ def _window_group_limit_threshold(spark) -> int:
 # Above it, a hot host's single-task sort is the real skew hazard the
 # salted two-phase exists for (bench: 48M half-hot rows, plain 43.4 s vs
 # salted 12.4 s).
-SALTED_MIN_FRONTIER = int(
-    os.environ.get("WALKER_SPARK_SALTED_MIN_FRONTIER", "2000000")
-)
+SALTED_MIN_FRONTIER = 2_000_000
 
 
 def select_fetch_batch(

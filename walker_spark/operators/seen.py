@@ -22,7 +22,6 @@ traffic is executor→executor tree-shaped, not all-to-driver.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -170,7 +169,7 @@ def split_by_bloom(cands: DataFrame, bloom: BloomShards, key: str = "url") -> Da
 # rounds (and sandbox-sized crawls) skip the candidate-side shuffle
 # entirely, while a production-sized seen table keeps the shuffle
 # anti-join (billions of rows can never broadcast).
-SEEN_BROADCAST_MAX = int(os.environ.get("WALKER_SPARK_SEEN_BROADCAST_MAX", "1000000"))
+SEEN_BROADCAST_MAX = 1_000_000
 
 
 def seen_anti_join(

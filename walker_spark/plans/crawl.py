@@ -72,19 +72,6 @@ RESULT_COLUMNS = [f.strip().split(" ")[0] for f in RESULT_SCHEMA.split(", ")]
 
 BLOOM_AUTO_THRESHOLD = 500_000  # seen rows before 'auto' builds the shards
 
-# host_prune='auto' pays one probe job per round (collect the batch's
-# post-redirect host set) to win row-group/partition pruning on the
-# pages scan. That trade only pays when the prunable scan is LARGE:
-# measured on the bench site (a ~20 MB pages table) the probes cost
-# ~0.25 s/round — ~15% of the whole crawl — to prune a scan that takes
-# milliseconds. Below this many input bytes the probe is skipped
-# outright; production page stores (well past the threshold) keep the
-# manual dynamic-partition-pruning behavior unchanged.
-HOST_PRUNE_MIN_BYTES = int(
-    os.environ.get("WALKER_SPARK_HOST_PRUNE_MIN_BYTES", str(4 << 30))
-)
-
-
 def resolve_redirects(redirects: DataFrame, cap: int = REDIRECT_CAP) -> DataFrame:
     """redirect_edges(src, code, dst) → redirect_map(src, final_url,
     redirects array<struct<code,url>>, error).
@@ -203,7 +190,6 @@ def fetch_and_extract(
     group_header_enabled: bool,
     multi_host: bool,
     base_url: str,
-    host_prune: list[str] | str | None = None,
     scrape_func=None,
     validation_func=None,
     group_validator=None,
@@ -216,13 +202,6 @@ def fetch_and_extract(
     Column pruning matters at 100 TB: only ``url`` and ``html`` of
     ``pages`` are read (the parquet scan never touches ``text``/``lang``
     here), and the html binary exists only inside this stage.
-
-    ``host_prune``: manual dynamic-partition-pruning — when the round's
-    batch touches few hosts, an ``isin`` filter on the pages scan lets
-    parquet prune row groups / host_hash partitions instead of scanning
-    the whole table into the join. (At web scale a round can touch
-    millions of hosts — the caller only passes this when the host list
-    is small.)
 
     Join ``strategy`` — the html bytes are the dominant data volume, so
     the strategy is chosen to move them as little as possible:
@@ -278,23 +257,7 @@ def fetch_and_extract(
             F.array().cast("array<struct<code:int,url:string>>").alias("redirects"),
             F.lit("").alias("fetch_error"),
         )
-    p = pages
-    if host_prune is not None and "host" in pages.columns:
-        if host_prune == "auto":
-            # hosts come from the post-redirect final URLs (a redirect
-            # may leave the batch's host set); the batch is tiny next to
-            # pages, so this probe job is cheap. Bail out when the round
-            # touches too many hosts for an isin filter.
-            probe = (
-                j.select(authority_of(F.col("final_url")).alias("h"))
-                .distinct()
-                .limit(10_001)
-                .collect()
-            )
-            host_prune = [r["h"] for r in probe]
-        if isinstance(host_prune, list) and len(host_prune) <= 10_000:
-            p = p.filter(F.col("host").isin(host_prune))
-    p = p.select(F.col("url").alias("page_url"), F.col("html"))
+    p = pages.select(F.col("url").alias("page_url"), F.col("html"))
     if strategy == "auto":
         strategy = (
             "broadcast"
@@ -602,7 +565,6 @@ class Crawler:
         result_modifier=None,
         link_list_filter=None,
         group_validator=None,
-        host_prune: str | None = "auto",
         fetch_strategy: str = "auto",
         seeds_unique: bool = False,
         seen_compact_every: int = 16,
@@ -632,7 +594,6 @@ class Crawler:
         self.result_modifier = result_modifier
         self.link_list_filter = link_list_filter
         self.group_validator = group_validator
-        self.host_prune = host_prune
         self.fetch_strategy = fetch_strategy
         self.seeds_unique = seeds_unique
         self.seen_compact_every = seen_compact_every
@@ -693,31 +654,10 @@ class Crawler:
         with open(self.io.path("metrics.jsonl"), "a") as f:
             f.write(json.dumps(m.__dict__) + "\n")
 
-    def _effective_host_prune(self) -> list[str] | str | None:
-        """Resolve ``host_prune='auto'`` once per run: keep the per-round
-        probe only when the pages scan is big enough for pruning to
-        matter (see HOST_PRUNE_MIN_BYTES); explicit lists/None pass
-        through untouched. Sources without file listings (views, RDD
-        frames) keep the probe — their scan cost is unknown."""
-        if self.host_prune != "auto":
-            return self.host_prune
-        try:
-            total = 0
-            for f in self.pages.inputFiles():
-                p = f[7:] if f.startswith("file://") else f
-                if os.path.exists(p):
-                    total += os.path.getsize(p)
-                if total >= HOST_PRUNE_MIN_BYTES:
-                    return "auto"
-        except Exception:
-            return "auto"
-        return None
-
     def run(self, resume: bool = False) -> dict:
         conf = self.conf
         io = self.io
         t_start = time.time()
-        host_prune = self._effective_host_prune()
 
         forbidden = self.check_seeds()
         if forbidden and not self.multi_host:
@@ -852,7 +792,6 @@ class Crawler:
                 conf.group_header != "",
                 self.multi_host,
                 conf.target.base_url,
-                host_prune=host_prune,
                 scrape_func=self.scrape_func,
                 validation_func=self.validation_func,
                 group_validator=self.group_validator,
