@@ -123,7 +123,6 @@ def _run_doc_crawl_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint_dir=ckpt,
         multi_host=True,
         seeds=seeds,
-        use_bloom=False,  # tiny crawl; bloom build costs more than it saves
     )
     crawler.run()
     return crawler.results_df()

@@ -192,7 +192,6 @@ def run_kernel(spark, paths, tag: str, host_budget: int = 0, n_salts: int = 8) -
         checkpoint_dir=ckpt,
         multi_host=True,
         seeds=pages.select("url"),
-        use_bloom=False,
         seeds_unique=True,  # seeds = the pages url column, unique by construction
         fetch_strategy="bucketed",
     )

@@ -47,7 +47,6 @@ def _run(spark, ckpt, canonical):
         conf,
         pages=_pages(spark),
         checkpoint_dir=ckpt,
-        use_bloom=canonical,  # exercise the bloom path on canonical keys too
     )
     c.run()
     return c

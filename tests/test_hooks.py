@@ -60,7 +60,6 @@ def test_scrape_validation_modifier_hooks(spark, small_site, tmp_path):
         validation_func=validation_hook,
         result_modifier=modifier_hook,
         group_validator=gv,
-        use_bloom=False,
     )
     c.run()
     res = c.results_df().filter(F.col("code") == 200).collect()
@@ -92,7 +91,6 @@ def test_link_list_filter_replaces_stack(spark, small_site, tmp_path):
         robots_bodies=store.robots,
         checkpoint_dir=str(tmp_path / "ck2"),
         link_list_filter=link_filter_hook,
-        use_bloom=False,
     )
     c.run()
     seen = {r["url"] for r in c.seen_df().collect()}

@@ -27,7 +27,6 @@ def _mk(spark, paths, store, ckpt):
         redirect_edges=spark.read.parquet(paths["redirect_edges"]),
         robots_bodies=store.robots,
         checkpoint_dir=ckpt,
-        use_bloom=False,
     )
 
 

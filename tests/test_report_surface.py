@@ -39,7 +39,6 @@ def crawled(spark, tmp_path_factory):
         redirect_edges=spark.read.parquet(paths["redirect_edges"]),
         robots_bodies=store.robots,
         checkpoint_dir=str(tmp / "ck"),
-        use_bloom=False,
     )
     c.run()
     return c

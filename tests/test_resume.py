@@ -9,8 +9,10 @@ import os
 import pyspark.sql.functions as F
 
 from walker_spark.config import CrawlConfig, Target
+from walker_spark.plans import crawl
 from walker_spark.plans.crawl import Crawler
 from walker_spark.sources.synthetic import SiteSpec, build_store, write_pages_tables
+from walker_spark.sources.tables import ParquetTableIO, read_json
 
 
 def _mk(spark, paths, store, ckpt, max_rounds=0):
@@ -28,7 +30,6 @@ def _mk(spark, paths, store, ckpt, max_rounds=0):
         redirect_edges=spark.read.parquet(paths["redirect_edges"]),
         robots_bodies=store.robots,
         checkpoint_dir=ckpt,
-        use_bloom=False,
     )
 
 
@@ -108,3 +109,99 @@ def test_seen_compaction_resume_exact(spark, tmp_path):
     assert {r["url"] for r in resumed.seen_df().collect()} == {
         r["url"] for r in plain.seen_df().collect()
     }
+
+
+# ---- kills inside a round ----------------------------------------------
+# A kill mid-round leaves that round's files partly written and the
+# manifest at the previous round. Each case raises at one write boundary
+# of round KILL_ROUND; a fresh Crawler resuming from the checkpoint must
+# then end exactly where an uninterrupted crawl does.
+
+KILL_ROUND = 1
+
+
+class _Kill(Exception):
+    """Stands in for the process dying at a write boundary."""
+
+
+def _kill_at_write(name, torn=False):
+    """Raise once table ``name`` is written; ``torn`` leaves a 1-row copy
+    of it, as a write cut off part-way would."""
+
+    def patch(mp, fired):
+        real = ParquetTableIO.write
+
+        def write(self, df, n, *a, **k):
+            if fired or n != name:
+                return real(self, df, n, *a, **k)
+            fired.append(n)
+            real(self, df.limit(1) if torn else df, n, *a, **k)
+            raise _Kill(n)
+
+        mp.setattr(ParquetTableIO, "write", write)
+
+    return patch
+
+
+def _kill_before_manifest(mp, fired):
+    real = crawl.atomic_write_json
+
+    def write_json(path, obj):
+        if not fired and path.endswith("manifest.json") and obj["round"] == KILL_ROUND:
+            fired.append(path)
+            raise _Kill(path)
+        real(path, obj)
+
+    mp.setattr(crawl, "atomic_write_json", write_json)
+
+
+@pytest.fixture(scope="module")
+def small_site(spark, tmp_path_factory):
+    """The 28-page site, and its uninterrupted crawl's end state."""
+    root = tmp_path_factory.mktemp("kill_site")
+    spec = SiteSpec(seed=11, n_hosts=2, n_pages=28)
+    paths = write_pages_tables(spark, spec, str(root / "site"))
+    store = build_store(spec)
+    ref = _mk_small(spark, paths, store, str(root / "ref"))
+    summary = ref.run()
+    assert summary["rounds"] > KILL_ROUND + 1  # the kill round is mid-crawl
+    return paths, store, _end_state(ref, summary)
+
+
+def _mk_small(spark, paths, store, ckpt):
+    c = _mk(spark, paths, store, ckpt)  # 5 rounds on this site
+    c.seen_compact_every = 2  # every round with new links compacts
+    return c
+
+
+def _end_state(c, summary):
+    key = lambda r: (r["url"], r["code"], r["depth"], r["round"])  # noqa: E731
+    return (
+        summary["rounds"],
+        {r["url"] for r in c.seen_df().collect()},
+        sorted(key(r) for r in c.results_df().collect()),
+    )
+
+
+@pytest.mark.parametrize(
+    "kill",
+    [
+        _kill_at_write(f"rounds/r={KILL_ROUND:05d}/results"),
+        _kill_at_write(f"rounds/r={KILL_ROUND:05d}/frontier"),
+        _kill_before_manifest,
+        _kill_at_write(f"seen_compact/r={KILL_ROUND:05d}", torn=True),
+    ],
+    ids=["after_results", "after_frontier", "before_manifest", "mid_compaction"],
+)
+def test_resume_after_kill_at_write_boundary(spark, tmp_path, small_site, kill):
+    paths, store, want = small_site
+    ckpt = str(tmp_path / "ck")
+    fired: list[str] = []
+    with pytest.MonkeyPatch.context() as mp:
+        kill(mp, fired)
+        with pytest.raises(_Kill):
+            _mk_small(spark, paths, store, ckpt).run()
+    assert read_json(os.path.join(ckpt, "manifest.json"))["round"] == KILL_ROUND - 1
+
+    resumed = _mk_small(spark, paths, store, ckpt)
+    assert _end_state(resumed, resumed.run(resume=True)) == want

@@ -88,7 +88,6 @@ def test_e2e_scores_match_oracle(spark, store, tmp_path):
         pages=pages_df,
         checkpoint_dir=str(tmp_path / "ck"),
         group_validator=gv,
-        use_bloom=False,
     )
     crawler.run()
     res = crawler.results_df()

@@ -19,8 +19,8 @@ dispatcher     Pure-Python reference dispatcher: the deterministic oracle
 functions/     Columnar + pandas-UDF scalar logic (HTML extraction, robots,
                latency buckets, text analytics, hashing).
 operators/     Composable DataFrame operators (link filter stack, URL-seen
-               anti-join with Bloom prefilter, politeness window, dedup,
-               similarity search, reports).
+               anti-join, politeness window, dedup, similarity search,
+               reports).
 sources/       Table IO seam (parquet now, Iceberg-ready) + deterministic
                synthetic pages/seeds/robots generators.
 plans/         The BSP crawl round driver with checkpoint/resume.

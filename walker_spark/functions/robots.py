@@ -10,9 +10,8 @@ Google Robots Exclusion Protocol semantics from scratch:
 * path matching: ``*`` wildcard, ``$`` end anchor, longest-pattern-wins,
   ``Allow`` wins ties, no match → allowed; empty Disallow = allow all.
 
-Pure Python core (used by the dispatcher oracle and by a broadcast into
-the Spark-side vectorized filter), plus :func:`rules_rows` which renders
-parsed rules as plain rows for a ``robots_rules`` DataFrame.
+Pure Python core, used by the dispatcher oracle and by a broadcast into
+the Spark-side vectorized filter.
 """
 
 from __future__ import annotations
@@ -20,7 +19,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-__all__ = ["Rule", "RobotsGroup", "RobotsData", "parse_robots", "rules_rows"]
+__all__ = ["Rule", "RobotsGroup", "RobotsData", "parse_robots"]
 
 
 @dataclass
@@ -139,18 +138,3 @@ def parse_robots(body: str) -> RobotsData:
             last_was_agent = False
     return data
 
-
-def rules_rows(host: str, body: str, agent: str) -> list[dict]:
-    """Flatten the agent-selected group to rows for a broadcastable
-    ``robots_rules(host, pattern, allow, specificity)`` DataFrame."""
-    group = parse_robots(body).find_group(agent)
-    return [
-        {
-            "host": host,
-            "pattern": r.pattern,
-            "allow": r.allow,
-            "specificity": r.specificity,
-        }
-        for r in group.rules
-        if r.pattern
-    ]

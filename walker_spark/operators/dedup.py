@@ -59,11 +59,7 @@ def _spread_map_side(df: DataFrame) -> DataFrame:
     repartition (deterministic under retries via Spark's
     sort-before-repartition) only fires for small inputs."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        nparts = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - planning quirk, keep the plan
-        return df
-    if nparts >= target:
+    if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
 

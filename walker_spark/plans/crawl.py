@@ -4,8 +4,8 @@ Per round (SURVEY.md §3.1 mapping of ``scrapeloop.go:202-368``):
 
   frontier → politeness select (W5) → fetch join against ``pages`` (J1,
   with redirect resolution) → vectorized extract (H1/H2, pandas UDF) →
-  explode links → native filter stack (F1-F9) → Bloom prefilter + exact
-  anti-join vs seen (J2) → union into next frontier (SE3) → checkpoint
+  explode links → native filter stack (F1-F9) → exact anti-join vs seen
+  (J2) → union into next frontier (SE3) → checkpoint
   (batch order, results, frontier, seen delta, metrics) → repeat until
   the frontier drains (loop complete, ``scrapeloop.go:230-246``).
 
@@ -41,7 +41,7 @@ from ..functions.hashing import synthetic_duration_us, synthetic_time_us
 from ..functions.robots import parse_robots
 from ..operators.linkfilter import apply_link_filters, authority_of, scheme_of
 from ..operators.politeness import select_fetch_batch
-from ..operators.seen import BloomShards, seen_anti_join
+from ..operators.seen import seen_anti_join
 from ..sources.tables import atomic_write_json, make_table_io, read_json
 from ..urlnorm import normalize_link, url_host, url_path
 
@@ -70,7 +70,6 @@ FRONTIER_COLS = ["url", "host", "depth", "link_count"]
 
 RESULT_COLUMNS = [f.strip().split(" ")[0] for f in RESULT_SCHEMA.split(", ")]
 
-BLOOM_AUTO_THRESHOLD = 500_000  # seen rows before 'auto' builds the shards
 
 def resolve_redirects(redirects: DataFrame, cap: int = REDIRECT_CAP) -> DataFrame:
     """redirect_edges(src, code, dst) → redirect_map(src, final_url,
@@ -559,7 +558,6 @@ class Crawler:
         multi_host: bool = False,
         seeds: list[str] | None = None,
         record_order: bool = False,
-        use_bloom: bool | str = "auto",
         scrape_func=None,
         validation_func=None,
         result_modifier=None,
@@ -588,7 +586,6 @@ class Crawler:
         self.multi_host = multi_host
         self.seeds = seeds if seeds is not None else conf.seed_urls()
         self.record_order = record_order
-        self.use_bloom = use_bloom
         self.scrape_func = scrape_func
         self.validation_func = validation_func
         self.result_modifier = result_modifier
@@ -739,16 +736,6 @@ class Crawler:
                 raise redirect_t_err[0]
             redirect_map = io.read("redirect_map")
 
-        # Bloom prefilter policy: the shards only pay for themselves once
-        # the seen table dwarfs the per-round candidate set — 'auto'
-        # activates them past a size threshold (one catch-up build over
-        # the full seen table, then incremental deltas); True forces them
-        # from round 0 (tests / the 10^10 design point); False disables.
-        bloom = None
-        if self.use_bloom is True:
-            bloom = BloomShards.sized_for(max(4 * 10**6, 4 * seen_count))
-            bloom.add_urls_distributed(seen.select("url"))
-
         r = start_round
         total_fetched = 0
         while frontier_n > 0 and (conf.max_rounds <= 0 or r < conf.max_rounds):
@@ -837,68 +824,64 @@ class Crawler:
 
             lineage_t = InheritableThread(target=_write_lineage)
             lineage_t.start()
-            m.fetched = io.row_count(f"{rd}/results")
-            total_fetched += m.fetched
-            m.seconds["fetch_extract"] = round(time.time() - t0, 3)
+            try:
+                m.fetched = io.row_count(f"{rd}/results")
+                total_fetched += m.fetched
+                m.seconds["fetch_extract"] = round(time.time() - t0, 3)
 
-            t0 = time.time()
-            cand = link_candidates(
-                results,
-                conf,
-                self.robots_bodies,
-                self.spark,
-                use_custom_links=self.link_list_filter is not None,
-            )
-            # new = genuinely-new candidates. ONE fused write produces the
-            # next frontier (leftover ∪ new) partitioned by is_new; the
-            # is_new=true subdirectory IS the round's seen delta — no
-            # separate seen-delta write job, no second anti-join against
-            # the growing seen table.
-            new = seen_anti_join(
-                cand, seen, bloom, key=seen_key, seen_rows=seen_count
-            ).select(*fcols)
-            out = new.withColumn("is_new", F.lit(True))
-            if conf.host_budget > 0 and not leftover_empty:
-                # leftover = frontier ∖ batch; batch keys are small →
-                # broadcast anti-join, the frontier never shuffles here.
-                # With no budget the batch IS the frontier — leftover is
-                # provably empty and the broadcast would be frontier-sized
-                # (a driver OOM at the 10^10 design point), so skip it.
-                # (Same skip when frontier_n ≤ budget: batch == frontier.)
-                leftover = frontier.join(
-                    F.broadcast(batch.select("url")), "url", "left_anti"
-                ).select(*fcols)
-                out = leftover.withColumn("is_new", F.lit(False)).unionByName(out)
-            frontier_dir = f"{rd}/frontier"
-            io.write(out, frontier_dir, partition_by=["is_new"])
-            new_dir = f"{frontier_dir}/is_new=true"
-            m.new_links = io.row_count(new_dir)
-            if m.new_links > 0:
-                seen_names.append(new_dir)
-                # compaction: per-round delta dirs grow the seen table's
-                # file count O(rounds); every k rounds fold them into one
-                # directory (content-identical union rewrite) so the
-                # anti-join scan and resume read a bounded file set
-                if (
-                    self.seen_compact_every > 0
-                    and len(seen_names) >= self.seen_compact_every
-                ):
-                    cname = f"seen_compact/r={r:05d}"
-                    io.write(io.read_many(seen_names).select(*fcols), cname)
-                    seen_names = [cname]
-                seen = io.read_many(seen_names).select(F.col(seen_key).alias("url"))
-            seen_count += m.new_links
-            frontier_n = io.row_count(frontier_dir)
-            if bloom is not None and m.new_links > 0:
-                bloom.add_urls_distributed(
-                    io.read(new_dir).select(F.col(seen_key).alias("url"))
+                t0 = time.time()
+                cand = link_candidates(
+                    results,
+                    conf,
+                    self.robots_bodies,
+                    self.spark,
+                    use_custom_links=self.link_list_filter is not None,
                 )
-            elif self.use_bloom == "auto" and seen_count >= BLOOM_AUTO_THRESHOLD:
-                bloom = BloomShards.sized_for(max(4 * 10**6, 4 * seen_count))
-                bloom.add_urls_distributed(seen)
-            m.seconds["frontier"] = round(time.time() - t0, 3)
-
-            lineage_t.join()
+                # new = genuinely-new candidates. ONE fused write produces the
+                # next frontier (leftover ∪ new) partitioned by is_new; the
+                # is_new=true subdirectory IS the round's seen delta — no
+                # separate seen-delta write job, no second anti-join against
+                # the growing seen table.
+                new = seen_anti_join(
+                    cand, seen, key=seen_key, seen_rows=seen_count
+                ).select(*fcols)
+                out = new.withColumn("is_new", F.lit(True))
+                if conf.host_budget > 0 and not leftover_empty:
+                    # leftover = frontier ∖ batch; batch keys are small →
+                    # broadcast anti-join, the frontier never shuffles here.
+                    # With no budget the batch IS the frontier — leftover is
+                    # provably empty and the broadcast would be frontier-sized
+                    # (a driver OOM at the 10^10 design point), so skip it.
+                    # (Same skip when frontier_n ≤ budget: batch == frontier.)
+                    leftover = frontier.join(
+                        F.broadcast(batch.select("url")), "url", "left_anti"
+                    ).select(*fcols)
+                    out = leftover.withColumn("is_new", F.lit(False)).unionByName(out)
+                frontier_dir = f"{rd}/frontier"
+                io.write(out, frontier_dir, partition_by=["is_new"])
+                new_dir = f"{frontier_dir}/is_new=true"
+                m.new_links = io.row_count(new_dir)
+                if m.new_links > 0:
+                    seen_names.append(new_dir)
+                    # compaction: per-round delta dirs grow the seen table's
+                    # file count O(rounds); every k rounds fold them into one
+                    # directory (content-identical union rewrite) so the
+                    # anti-join scan and resume read a bounded file set
+                    if (
+                        self.seen_compact_every > 0
+                        and len(seen_names) >= self.seen_compact_every
+                    ):
+                        cname = f"seen_compact/r={r:05d}"
+                        io.write(io.read_many(seen_names).select(*fcols), cname)
+                        seen_names = [cname]
+                    seen = io.read_many(seen_names).select(F.col(seen_key).alias("url"))
+                seen_count += m.new_links
+                frontier_n = io.row_count(frontier_dir)
+                m.seconds["frontier"] = round(time.time() - t0, 3)
+            finally:
+                # a failed round must not leave a writer running into
+                # the checkpoint that a resume is about to rewrite
+                lineage_t.join()
             if lineage_err:
                 raise lineage_err[0]
             atomic_write_json(

@@ -15,8 +15,8 @@ vectorized pandas wrappers for use inside Arrow-batched UDFs:
 
 * :func:`canonicalize` — the *seen-filter* canonical form mandated by the
   north rule: lowercase scheme+host, strip fragments and default ports,
-  sort query parameters. This is what gets hashed into the partitioned
-  URL-seen Bloom filter; it is an upgrade over the reference (walker keys
+  sort query parameters. In canonical-seen mode this is the key of the
+  URL-seen anti-join; it is an upgrade over the reference (walker keys
   its maps by the normalized string only).
 
 Plus cheap accessors (``url_host``, ``url_path``, ``url_depth``) used by
