@@ -9,7 +9,7 @@ import pytest
 
 from walker_spark.config import CrawlConfig, Target
 from walker_spark.functions.htmlschema import GroupValidator
-from walker_spark.plans.crawl import Crawler
+from walker_spark.plans.crawl import Crawler, fetch_and_extract
 from walker_spark.sources.synthetic import SiteSpec, build_store, write_pages_tables
 
 
@@ -98,3 +98,31 @@ def test_link_list_filter_replaces_stack(spark, small_site, tmp_path):
     assert all(
         "/catalogue/" in u or u == "https://host-0000.example/" for u in seen
     ), sorted(seen)[:5]
+
+
+def test_link_list_filter_error_lands_in_its_row(spark):
+    def link_filter_hook(base, url, links, structure):
+        if url.endswith("/bad"):
+            raise ValueError("hook failed on bad")
+        return {base + "/next": 1}
+
+    urls = ["https://host-0000.example/good", "https://host-0000.example/bad"]
+    batch = spark.createDataFrame(
+        [(u, "host-0000.example", 0, 1, i) for i, u in enumerate(urls)],
+        "url string, host string, depth int, link_count long, batch_pos long",
+    )
+    pages = spark.createDataFrame(
+        [(u, bytearray(b"<html><a href='/x'>x</a></html>")) for u in urls],
+        "url string, html binary",
+    )
+    rows = {
+        r["url"]: r
+        for r in fetch_and_extract(
+            batch, pages, None, 0, False, False, "https://host-0000.example",
+            link_list_filter=link_filter_hook, strategy="broadcast",
+        ).collect()
+    }
+    assert "hook failed on bad" in rows[urls[1]]["error"]
+    assert not rows[urls[1]]["custom_links"]
+    assert rows[urls[0]]["error"] == ""
+    assert rows[urls[0]]["custom_links"] == {"https://host-0000.example/next": 1}

@@ -431,8 +431,9 @@ def fetch_and_extract(
                             str(k): int(v)
                             for k, v in (llf(base, url, links, structure) or {}).items()
                         }
-                    except Exception:
+                    except Exception as e:
                         clinks = {}
+                        error = error or str(e)
                 o_code.append(200)
                 o_status.append(status_200)
                 o_ctype.append("text/html; charset=utf-8")

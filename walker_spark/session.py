@@ -23,6 +23,18 @@ def get_spark(
     level. AQE (runtime coalescing, skew-join splitting) is left at
     Spark's default, which is on. No Spark job runs here: the session's
     first query pays the engine's one-time initialization.
+
+    The driver JVM runs on HotSpot's C1 JIT tier only
+    (``-XX:TieredStopAtLevel=1``). In a session of a minute or so, C2
+    spent more CPU compiling (44-60 s per benchmark run) than its code
+    saved: without it ``crawl_rounds`` ``cpu_s`` fell 38%, while warm
+    repeated analytics queries ran ~17% slower on C1 code (BENCH.md,
+    "Session JVM: C1-only JIT"). In local mode the driver is also the
+    executor, so tasks run C1 code too; ``spark.executor.*`` is left
+    alone, so executors on a cluster keep C2. Spark prepends
+    ``defaultJavaOptions`` to a caller's ``extraJavaOptions``, so the two
+    compose; a long local job can restore C2 with
+    ``extra_conf={"spark.driver.defaultJavaOptions": ""}``.
     """
     # Make the package importable on executor Python workers regardless
     # of the driver's cwd (the local-mode analogue of shipping the
@@ -54,6 +66,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
     )
     if extra_conf:
         for k, v in extra_conf.items():
