@@ -96,14 +96,10 @@ def _spark(cores: int):
         # #2); must be set at context startup, not post-hoc
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    # the broadcast-batch fetch join runs the extract UDF on pages *scan*
-    # partitions — split small bench files finely so the stage isn't
-    # capped by file count
+    # split small bench files finely so the pages scan isn't capped by
+    # file count
     s.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
     s.conf.set("spark.sql.files.openCostInBytes", str(512 * 1024))
-    # the bucketed pages table is written one-file-per-bucket, so its
-    # url-sorted scan can feed the merge join without a re-sort
-    s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     s.sparkContext.setLogLevel("ERROR")
     return s
 
@@ -161,7 +157,8 @@ def run_kernel(spark, paths, tag: str, host_budget: int = 0, n_salts: int = 8) -
     from walker_spark.sources.synthetic import host_name
     from walker_spark.sources.tables import register_bucketed_table
 
-    # co-located fetch join: pages bucketed by url, catalog re-registered
+    # co-located fetch join: pages bucketed by url (the planner keeps the
+    # layout, no pages-side exchange), catalog re-registered
     # per session (bucket metadata lives in the catalog, not the files;
     # per-tag table name so multiple sites can coexist in one session)
     pages = register_bucketed_table(
@@ -193,7 +190,6 @@ def run_kernel(spark, paths, tag: str, host_budget: int = 0, n_salts: int = 8) -
         multi_host=True,
         seeds=pages.select("url"),
         seeds_unique=True,  # seeds = the pages url column, unique by construction
-        fetch_strategy="bucketed",
     )
     t0 = time.time()
     summary = crawler.run()

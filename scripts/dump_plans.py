@@ -48,34 +48,26 @@ def main():
         "link_count", F.lit(0).cast("long")
     ).limit(50000)
     rmap = resolve_redirects(redirects)
-    fx = fetch_and_extract(frontier, pages, None, 0, True, True, "https://x",
-                           strategy="broadcast")
-    sections.append(("Fetch join + vectorized extract, broadcast-batch strategy (J1 + H1/H2)",
-                     "Pages scan must read ONLY (url, html); the batch (urls + scheduling "
-                     "ints, never html) broadcasts into the scan, so the extract UDF runs "
-                     "on scan partitions with ZERO html exchange; 404s come from a "
-                     "url-column-only anti-join.",
+    fx = fetch_and_extract(frontier, pages, None, 0, True, True, "https://x")
+    sections.append(("Fetch join + vectorized extract (J1 + H1/H2)",
+                     "Pages scan reads ONLY (url, html). A broadcast LEFT SEMI of the "
+                     "batch's url keys shrinks pages to the batch (pages streams once, no "
+                     "full-table shuffle); a SHUFFLE_HASH left join then moves only the "
+                     "batch's html, with no sort and no driver funnel. Pageless batch "
+                     "rows leave the left join with null html and become 404s in the "
+                     "extract.",
                      explain_str(fx)))
-    fx_sh = fetch_and_extract(frontier, pages, None, 0, True, True, "https://x",
-                              strategy="shuffle_hash")
-    sections.append(("Fetch join, fat-round shuffle-hash strategy (batch > broadcast threshold)",
-                     "Broadcast LEFT SEMI shrinks pages to the batch's url set (pages "
-                     "streams once, no full-table shuffle); SHUFFLE_HASH for the html "
-                     "join — one batch-sized html exchange, no sort, no driver funnel.",
-                     explain_str(fx_sh)))
     from walker_spark.sources.tables import register_bucketed_table
 
     pb = register_bucketed_table(
         spark, f"{site}/pages_bucketed", table="pages_bucketed_plans", buckets=64
     )
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    fx_b = fetch_and_extract(frontier, pb, None, 0, True, True, "https://x",
-                             strategy="bucketed")
-    sections.append(("Fetch join, bucketed co-located strategy (pages bucketed+sorted by url)",
-                     "The 10^10-design-point plan: NO Exchange and NO BroadcastExchange on "
-                     "the pages side — the merge join consumes the bucketed url-sorted scan "
-                     "in place; only the small batch side would exchange into the bucket "
-                     "layout.",
+    fx_b = fetch_and_extract(frontier, pb, None, 0, True, True, "https://x")
+    sections.append(("Fetch join on the bucketed pages table (bucketBy(64, url))",
+                     "The same plan, with no knob: the planner keeps the bucket layout, "
+                     "so there is NO Exchange on the pages side (bucketed scan -> "
+                     "broadcast left-semi -> ShuffledHashJoin); only the batch side "
+                     "exchanges into the 64-bucket layout.",
                      explain_str(fx_b)))
     sections.append(("Redirect resolution: pointer doubling",
                      "ceil(log2(cap+1)) self-joins resolve every chain <= cap in one lazy "

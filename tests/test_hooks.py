@@ -119,7 +119,7 @@ def test_link_list_filter_error_lands_in_its_row(spark):
         r["url"]: r
         for r in fetch_and_extract(
             batch, pages, None, 0, False, False, "https://host-0000.example",
-            link_list_filter=link_filter_hook, strategy="broadcast",
+            link_list_filter=link_filter_hook,
         ).collect()
     }
     assert "hook failed on bad" in rows[urls[1]]["error"]

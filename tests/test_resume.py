@@ -205,3 +205,36 @@ def test_resume_after_kill_at_write_boundary(spark, tmp_path, small_site, kill):
 
     resumed = _mk_small(spark, paths, store, ckpt)
     assert _end_state(resumed, resumed.run(resume=True)) == want
+
+
+
+def test_resume_after_torn_redirect_map(spark, tmp_path, small_site):
+    """A kill inside the redirect-map commit, before its `_SUCCESS`
+    marker: the resume must rebuild the map, not read the torn one."""
+    paths, store, _ = small_site
+    # The budgeted crawl from the root reaches no redirect source on this
+    # site, so seed every host-0000 source: each row of the map matters.
+    origin = "https://host-0000.example/"
+    srcs = sorted(
+        r["src"]
+        for r in spark.read.parquet(paths["redirect_edges"]).collect()
+        if r["src"].startswith(origin)
+    )
+
+    def mk(ckpt):
+        c = _mk_small(spark, paths, store, ckpt)
+        c.seeds = [origin] + srcs
+        return c
+
+    ref = mk(str(tmp_path / "ref"))
+    want = _end_state(ref, ref.run())
+    ckpt = str(tmp_path / "ck")
+    with pytest.MonkeyPatch.context() as mp:
+        _kill_at_write("redirect_map", torn=True)(mp, [])
+        with pytest.raises(_Kill):
+            mk(ckpt).run()
+    os.remove(os.path.join(ckpt, "redirect_map", "_SUCCESS"))
+    assert not os.path.exists(os.path.join(ckpt, "manifest.json"))
+
+    resumed = mk(ckpt)
+    assert _end_state(resumed, resumed.run(resume=True)) == want

@@ -1,4 +1,7 @@
-"""TableIO backend selection (the parquet/Iceberg flag, r3)."""
+"""TableIO backend selection (the parquet/Iceberg flag, r3) and what the
+parquet store counts as written."""
+
+import os
 
 import pytest
 
@@ -75,3 +78,23 @@ def test_iceberg_catalog_detection_logic(spark):
 
     got = iceberg_catalogs(spark)
     assert got == []
+
+
+def test_row_count_skips_uncommitted_files(spark, tmp_path):
+    """`row_count` counts what Spark's reader reads: a part file left
+    under `_temporary/` by an unfinished write is not part of the table."""
+    import shutil
+
+    from walker_spark.sources.tables import ParquetTableIO
+
+    io = ParquetTableIO(spark, str(tmp_path))
+    io.write(spark.range(7).repartition(2), "t")
+    part = next(f for f in os.listdir(io.path("t")) if f.endswith(".parquet"))
+    stray = os.path.join(io.path("t"), "_temporary", "0")
+    os.makedirs(stray)
+    shutil.copy(os.path.join(io.path("t"), part), stray)
+
+    assert io.row_count("t") == io.read("t").count() == 7
+    assert io.exists("t")
+    os.remove(os.path.join(io.path("t"), "_SUCCESS"))
+    assert not io.exists("t")

@@ -209,7 +209,10 @@ def extract_links(html: str) -> dict[str, int]:
     Counts: first canonical link href (even ""), every a[href != ""],
     every a[href != ""] found by re-parsing noscript raw text.
     """
-    d = _parse(html)
+    return _links_from_doc(_parse(html))
+
+
+def _links_from_doc(d: _Doc) -> dict[str, int]:
     links: dict[str, int] = {}
     for rel, href in d.rel_links:
         if rel == "canonical":
@@ -351,22 +354,7 @@ def extract_all(html: str) -> tuple[dict[str, int], dict, str]:
     :func:`extract_text` separately (all derive from the same ``_Doc``)."""
     d = _parse(html)
     # links (scrape.go:159-190)
-    links: dict[str, int] = {}
-    for rel, href in d.rel_links:
-        if rel == "canonical":
-            links[href] = links.get(href, 0) + 1
-            break
-    for href in d.anchors:
-        links[href] = links.get(href, 0) + 1
-    for text in d.noscript_texts:
-        sub = _AnchorOnly()
-        try:
-            sub.feed(text)
-            sub.close()
-        except Exception:
-            continue
-        for href in sub.anchors:
-            links[href] = links.get(href, 0) + 1
+    links = _links_from_doc(d)
     # structure (extract.go:17-70)
     s = _structure_from_doc(d)
     # text (engine contract)

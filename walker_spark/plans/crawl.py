@@ -178,9 +178,6 @@ def resolve_redirects(redirects: DataFrame, cap: int = REDIRECT_CAP) -> DataFram
     )
 
 
-BROADCAST_BATCH_MAX = 1_000_000  # batch rows; above this the broadcast build would strain the driver
-
-
 def fetch_and_extract(
     batch: DataFrame,
     pages: DataFrame,
@@ -193,8 +190,6 @@ def fetch_and_extract(
     validation_func=None,
     group_validator=None,
     link_list_filter=None,
-    strategy: str = "auto",
-    batch_rows: int | None = None,
 ) -> DataFrame:
     """J1 + H1/H2: the fetch join and the vectorized extract stage.
 
@@ -202,26 +197,19 @@ def fetch_and_extract(
     ``pages`` are read (the parquet scan never touches ``text``/``lang``
     here), and the html binary exists only inside this stage.
 
-    Join ``strategy`` — the html bytes are the dominant data volume, so
-    the strategy is chosen to move them as little as possible:
-
-    * ``"broadcast"`` (auto when ``batch_rows`` ≤ ``BROADCAST_BATCH_MAX``)
-      — broadcast the *batch* (urls + small ints, never html) and
-      inner-join it into the pages scan: html is consumed by the extract
-      UDF in the scan partitions with **zero html exchange**. Batch rows
-      with no page (404) come from a url-column-only anti-join; fetch
-      errors bypass the page lookup. All three slices union into one
-      ``mapInPandas``.
-    * ``"shuffle_hash"`` (auto above the threshold) — broadcast-semi
-      shrink of pages to the batch's url set, then a SHUFFLE_HASH join:
-      one batch-sized html exchange, no driver funnel, no sort. The
-      10^10-frontier fat-round path for an unbucketed pages table.
-    * ``"bucketed"`` — ``pages`` is a bucketed-by-url table
-      (``spark.table(...)`` of a ``bucketBy(n, "url").sortBy("url")``
-      write): a plain left join runs bucket-co-located — NO exchange of
-      html, NO driver broadcast/funnel of anything, only the small batch
-      side shuffles into the bucket layout. The steady-state fat-round
-      plan at the 10^10 design point.
+    One join plan for every batch, as walker fetches every url the same
+    way (``scrape.go:33-157``). A broadcast LEFT SEMI first shrinks pages
+    to the batch's url set: pages streams once and the batch keys are
+    the build side, so the pages table never shuffles. Then a
+    SHUFFLE_HASH left join, not a broadcast: the shrunk side is about
+    the whole batch's html, and a driver broadcast of it would serialize
+    the round. The hash join needs no sort, and AQE still coalesces the
+    extract stage and splits skew. Batch rows with no page (404) and
+    fetch-error rows leave the left join with null html; the extract
+    tests the fetch error first, then the html. On a pages table
+    bucketed by url (``write_bucketed_table``) the planner keeps the
+    bucket layout: only the batch side exchanges, and the pages side
+    neither exchanges nor sorts (BENCH.md, "Fetch: one join plan").
 
     ``scrape_func``/``validation_func``: walker's user extension hooks
     (reference ``walker.go:45,47``; called ``scrape.go:132-149``) —
@@ -257,61 +245,14 @@ def fetch_and_extract(
             F.lit("").alias("fetch_error"),
         )
     p = pages.select(F.col("url").alias("page_url"), F.col("html"))
-    if strategy == "auto":
-        strategy = (
-            "broadcast"
-            if batch_rows is not None and batch_rows <= BROADCAST_BATCH_MAX
-            else "shuffle_hash"
-        )
-    if strategy == "broadcast":
-        # Batch side broadcast (urls + scheduling ints — NOT html): the
-        # inner join runs inside the pages scan partitions, so the html
-        # bytes never cross an exchange and the extract UDF inherits the
-        # scan's parallelism (no AQE-coalesce trap: there's no shuffle
-        # to coalesce). 404s come from a url-only anti-join against the
-        # pages url column (column-pruned scan, SHUFFLE_HASH keeps the
-        # big side unsorted); fetch errors never touch pages.
-        j_err = j.filter(F.col("fetch_error") != "")
-        j_ok = j.filter(F.col("fetch_error") == "")
-        inner = p.join(F.broadcast(j_ok), p["page_url"] == j_ok["final_url"], "inner")
-        p_urls = p.select("page_url")
-        missing = j_ok.join(
-            p_urls.hint("SHUFFLE_HASH"),
-            j_ok["final_url"] == p_urls["page_url"],
-            "left_anti",
-        )
-
-        def _pageless(df: DataFrame) -> DataFrame:
-            return df.withColumn("page_url", F.lit(None).cast("string")).withColumn(
-                "html", F.lit(None).cast("binary")
-            )
-
-        joined = inner.unionByName(_pageless(missing)).unionByName(_pageless(j_err))
-    elif strategy == "bucketed":
-        # MERGE hint: never let the planner broadcast the html side (it
-        # would funnel the pages slice through the driver); the bucketed,
-        # url-sorted scan satisfies the merge join's distribution and
-        # ordering, so only the small batch side exchanges+sorts.
-        joined = j.join(p.hint("MERGE"), j["final_url"] == p["page_url"], "left")
-    else:
-        # Fat-round path (batch too big to broadcast): a plain
-        # `j LEFT JOIN p` cannot broadcast either side, so it would
-        # sort-merge-shuffle the whole pages table every round. Shrink
-        # pages first with a broadcast LEFT SEMI (pages streams once,
-        # batch keys are the build side — no pages shuffle); then a
-        # SHUFFLE_HASH join, not broadcast: p_small is ≈ the whole
-        # batch's html (100s of MB+) — funneling it through a driver
-        # broadcast serializes the round. Shuffle-hash keys both sides
-        # by url with shuffle-wide parallelism for the extract; no sort
-        # (html rows never sort-merge), AQE still splits skew.
-        p_small = p.join(
-            F.broadcast(j.select(F.col("final_url").alias("page_url")).distinct()),
-            "page_url",
-            "left_semi",
-        )
-        joined = j.join(
-            p_small.hint("SHUFFLE_HASH"), j["final_url"] == p_small["page_url"], "left"
-        )
+    # Duplicate keys on a left-semi build side change nothing, so the
+    # key side needs no distinct (and no shuffle job for one).
+    p_small = p.join(
+        F.broadcast(j.select(F.col("final_url").alias("page_url"))), "page_url", "left_semi"
+    )
+    joined = j.join(
+        p_small.hint("SHUFFLE_HASH"), j["final_url"] == p_small["page_url"], "left"
+    )
 
     rn = round_no
     ghe = group_header_enabled
@@ -564,7 +505,6 @@ class Crawler:
         result_modifier=None,
         link_list_filter=None,
         group_validator=None,
-        fetch_strategy: str = "auto",
         seeds_unique: bool = False,
         seen_compact_every: int = 16,
     ):
@@ -592,7 +532,6 @@ class Crawler:
         self.result_modifier = result_modifier
         self.link_list_filter = link_list_filter
         self.group_validator = group_validator
-        self.fetch_strategy = fetch_strategy
         self.seeds_unique = seeds_unique
         self.seen_compact_every = seen_compact_every
         self.metrics: list[RoundMetrics] = []
@@ -784,8 +723,6 @@ class Crawler:
                 validation_func=self.validation_func,
                 group_validator=self.group_validator,
                 link_list_filter=self.link_list_filter,
-                strategy=self.fetch_strategy,
-                batch_rows=frontier_n,  # batch ⊆ frontier: a safe upper bound
             )
             if self.result_modifier is not None:
                 results = self.result_modifier(results)

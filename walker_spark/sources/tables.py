@@ -139,19 +139,20 @@ class ParquetTableIO:
         ``snapshot.summary['total-records']``)."""
         import pyarrow.parquet as pq
 
-        p = self.path(name)
         total = 0
-        for root, _dirs, files in os.walk(p):
+        for root, dirs, files in os.walk(self.path(name)):
+            # Spark's reader skips `_`/`.` entries (`_temporary/`, `_SUCCESS`, crc files)
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
             for f in files:
-                if f.endswith(".parquet"):
+                if f.endswith(".parquet") and not f.startswith(("_", ".")):
                     total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
         return total
 
     def exists(self, name: str) -> bool:
-        p = self.path(name)
-        return os.path.exists(os.path.join(p, "_SUCCESS")) or (
-            os.path.isdir(p) and any(f.endswith(".parquet") for f in os.listdir(p))
-        )
+        """Whether table ``name`` was fully written. Spark's file commit
+        moves task files into place and writes ``_SUCCESS`` last, so a
+        directory of part files without it is a commit cut off part-way."""
+        return os.path.exists(os.path.join(self.path(name), "_SUCCESS"))
 
 
 def iceberg_catalogs(spark: SparkSession) -> list[str]:
