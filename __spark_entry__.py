@@ -185,14 +185,13 @@ def q_crawl_reverse_links(spark, sf):
 
 def q_crawl_fetch_batch(spark, sf):
     """W5 — the crown op (VERDICT r3 #2): one politeness round's fetch
-    batch through the PRODUCTION salted exact-top-k operator
-    (politeness.select_fetch_batch, n_salts=8), oracled against the
-    plain unsalted SQL window — the equality IS the salting-identity
-    proof on real data. The frontier derives deterministically from
+    batch through the PRODUCTION per-host top-k operator
+    (politeness.select_fetch_batch), oracled against a plain SQL
+    window on real data. The frontier derives deterministically from
     documents with a deliberately hot host (every even doc_id lands on
-    hot.example ≈ half the frontier — the Zipf scenario the salting
-    exists for) and heavy (depth, link_count) ties so the url-asc
-    tiebreak is load-bearing."""
+    hot.example ≈ half the frontier — the Zipf scenario the map-side
+    group limit exists for) and heavy (depth, link_count) ties so the
+    url-asc tiebreak is load-bearing."""
     from walker_spark.operators.politeness import select_fetch_batch
 
     docs = _t(spark, sf, "documents")
@@ -205,9 +204,9 @@ def q_crawl_fetch_batch(spark, sf):
         (F.col("doc_id") % 3).cast("long").alias("depth"),
         ((F.col("doc_id") % 7) * 3).cast("long").alias("link_count"),
     )
-    return select_fetch_batch(
-        frontier, host_budget=16, n_salts=8, strategy="salted"
-    ).select("url", "host", "depth", "link_count").orderBy("url")
+    return select_fetch_batch(frontier, host_budget=16).select(
+        "url", "host", "depth", "link_count"
+    ).orderBy("url")
 
 
 def q_crawl_link_filters(spark, sf):
@@ -2897,11 +2896,10 @@ def oracle_sql() -> dict[str, str]:
             FROM allurls u LEFT JOIN redges r ON r.dst = u.url
             GROUP BY u.url ORDER BY u.url
         """,
-        # crawl_fetch_batch: the oracle is the UNSALTED per-host window —
-        # the Spark side runs the two-phase salted top-k, so a hash
-        # match proves the salting identity (per-host top-budget ⊆
-        # union of per-salt top-budget) on a frontier where one host
-        # holds ~half the rows.
+        # crawl_fetch_batch: the oracle is the per-host window in SQL —
+        # the Spark side adds a map-side partial group limit, so a hash
+        # match proves that limit keeps the exact per-host top-budget on
+        # a frontier where one host holds ~half the rows.
         "crawl_fetch_batch": """
             WITH f AS (
               SELECT printf('https://%s/d/%d.html',

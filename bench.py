@@ -146,12 +146,11 @@ def gen_site(
     return paths
 
 
-def run_kernel(spark, paths, tag: str, host_budget: int = 0, n_salts: int = 8) -> dict:
+def run_kernel(spark, paths, tag: str, host_budget: int = 0) -> dict:
     """One mega-round: the whole pages table is the frontier; schedule,
     fetch-join, extract, filter, and seen-anti-join it in a single BSP
     superstep (max_rounds=1). ``host_budget`` > 0 runs the politeness
-    selection for real (the skew benches); ``n_salts=1`` is the
-    no-salting counterfactual — a plain per-host window."""
+    selection for real (the skew benches)."""
     from walker_spark.config import CrawlConfig, Target
     from walker_spark.plans.crawl import Crawler
     from walker_spark.sources.synthetic import host_name
@@ -173,7 +172,6 @@ def run_kernel(spark, paths, tag: str, host_budget: int = 0, n_salts: int = 8) -
         # budget ≥ frontier degenerate into a full per-host sort (the
         # real windows are exercised by the budgeted full-crawl bench)
         host_budget=host_budget,
-        hot_host_salts=n_salts,
         agent="walker-spark",
         group_header="group",
         max_rounds=1,
@@ -270,25 +268,19 @@ def _gen_frontier(spark, n_rows: int, skewed: bool) -> str:
     return out
 
 
-def run_select_bench(
-    spark, n_rows: int, skewed: bool, strategy: str, budget: int = 2000
-) -> dict:
+def run_select_bench(spark, n_rows: int, skewed: bool, budget: int = 2000) -> dict:
     """Politeness-selection micro-bench over a pre-materialized frontier.
 
-    ``budget`` defaults to 2000 — deliberately ABOVE Spark's
-    windowGroupLimitThreshold (1000), the regime where Catalyst does
-    NOT insert partial group limits: a ``plain`` per-host window must
-    shuffle every row and sort the hot host's half of the frontier on
-    ONE task, while ``salted`` spreads it over n_salts shards. (At
-    budgets ≤ the threshold the optimizer's map-side top-k makes the
-    plain window both cheapest and skew-immune — that's strategy='auto'
-    in the operator; this bench records the above-threshold evidence
-    the north rule's salting clause is about.)"""
+    ``budget`` defaults to 2000 — deliberately ABOVE Spark's default
+    windowGroupLimitThreshold (1000), so the select has to raise the
+    session's threshold for Catalyst to keep the map-side partial top-k
+    that stops the hot host's half of the frontier sorting on ONE
+    task."""
     from walker_spark.operators.politeness import select_fetch_batch
 
     frontier = spark.read.parquet(_gen_frontier(spark, n_rows, skewed))
     t0 = time.time()
-    n = select_fetch_batch(frontier, budget, n_salts=8, strategy=strategy).count()
+    n = select_fetch_batch(frontier, budget).count()
     wall = time.time() - t0
     return {"wall": round(wall, 2), "selected": n, "rows": n_rows}
 
@@ -527,12 +519,11 @@ def main():
     #     pages, vs a uniform site of the same total size and the same
     #     per-host budget (every host holds >= budget pages on both
     #     sites, so fetch volume is identical). kernel_skewed should sit
-    #     within ~1.3x of kernel_uniform; the n_salts=1 run is the
-    #     no-salting counterfactual at kernel level.
+    #     within ~1.3x of kernel_uniform.
     # (b) Politeness-select micro-bench at a frontier size where the
     #     window IS the measurement (no html, no fetch): half the rows
-    #     on one host. This is where the unsalted window's single-task
-    #     sort shows up undiluted.
+    #     on one host. This is where a hot host's cost shows up
+    #     undiluted.
     if os.environ.get("SPARK_GRAFT_SKIP_SKEW", "") != "1":
         skew_pages = int(os.environ.get("SPARK_GRAFT_SKEW_PAGES", "240000"))
         skew_budget = int(os.environ.get("SPARK_GRAFT_SKEW_BUDGET", "2000"))
@@ -542,7 +533,7 @@ def main():
         )
         # untimed warm-up on the small crawl site: the FIRST budgeted
         # bucketed kernel in a session pays ~11 s of one-time plan/
-        # codegen for the salted politeness-over-bucketed-scan shape
+        # codegen for the politeness-over-bucketed-scan shape
         # (measured: cold 19.9 s vs warm 8.8-9.5 s on identical input);
         # the skew section measures SKEW, not cold-start
         run_kernel(spark, paths, "skewwarm", host_budget=skew_budget)
@@ -553,26 +544,18 @@ def main():
             "kernel_skewed": run_kernel(
                 spark, zpaths, "skewhot", host_budget=skew_budget
             ),
-            "kernel_skewed_nosalt": run_kernel(
-                spark, zpaths, "skewhot1", host_budget=skew_budget, n_salts=1
-            ),
         }
         skew["kernel_skew_ratio"] = round(
             skew["kernel_skewed"]["wall"] / skew["kernel_uniform"]["wall"], 3
         )
         sel_rows = int(os.environ.get("SPARK_GRAFT_SELECT_ROWS", "48000000"))
-        run_select_bench(spark, 1_000_000, False, "plain")  # warm the path
-        skew["select_uniform"] = run_select_bench(spark, sel_rows, False, "salted")
-        skew["select_skewed"] = run_select_bench(spark, sel_rows, True, "salted")
-        skew["select_skewed_nosalt"] = run_select_bench(spark, sel_rows, True, "plain")
-        skew["select_salting_speedup"] = round(
-            skew["select_skewed_nosalt"]["wall"] / skew["select_skewed"]["wall"], 2
-        )
-        # below the WindowGroupLimit threshold the PLAIN window is
-        # skew-immune (Catalyst's map-side partial top-k = free
-        # salting) — the counterpart evidence for strategy='auto'
+        run_select_bench(spark, 1_000_000, False)  # warm the path
+        skew["select_uniform"] = run_select_bench(spark, sel_rows, False)
+        skew["select_skewed"] = run_select_bench(spark, sel_rows, True)
+        # a budget inside Spark's default WindowGroupLimit threshold,
+        # where the select needs no threshold raise
         skew["select_skewed_wgl_plain"] = run_select_bench(
-            spark, sel_rows, True, "plain", budget=800
+            spark, sel_rows, True, budget=800
         )
         out["skew"] = skew
         out["queries"]["kernel_skewed"] = skew["kernel_skewed"]["wall"]
@@ -713,7 +696,7 @@ def main():
     if "skew" in out:
         compact["skew_summary"] = {
             k: out["skew"][k]
-            for k in ("kernel_skew_ratio", "select_salting_speedup")
+            for k in ("kernel_skew_ratio",)
             if k in out["skew"]
         }
     compact["full"] = "bench_out.json"

@@ -4,7 +4,7 @@ The judge-facing evidence that the declarative plans compile to what a
 100 TB deployment needs: column pruning into the parquet scans (the
 html binary never leaves the extract stage), pushed filters, broadcast
 vs shuffle-hash join choices, whole-stage codegen spans for the filter
-stack, and the salted politeness windows.
+stack, and the politeness window's map-side group limit.
 """
 
 from __future__ import annotations
@@ -91,10 +91,11 @@ def main():
     # 3. politeness
     from walker_spark.operators.politeness import select_fetch_batch
 
-    sel = select_fetch_batch(frontier, host_budget=100, n_salts=8)
-    sections.append(("Politeness window (W5): salted exact top-k per host",
-                     "Two window passes: (host, salt) then host over ≤ salts×budget rows — "
-                     "no single-task sort of a hot host's whole frontier.",
+    sel = select_fetch_batch(frontier, host_budget=100)
+    sections.append(("Politeness window (W5): per-host top-k with a map-side group limit",
+                     "One per-host window; the partial WindowGroupLimit before the exchange "
+                     "keeps ≤ budget rows per host per input partition — no single-task sort "
+                     "of a hot host's whole frontier.",
                      explain_str(sel)))
 
     # 4. a report query over the testdata

@@ -135,3 +135,21 @@ def test_bad_ldjson_skipped():
     )
     s = extract_structure(html)
     assert s["linked_data"] == [{"context": "c", "type": "t"}]
+
+
+def test_invalid_and_deep_ldjson_skipped_structure_intact():
+    """A parse error and a nesting too deep for the decoder both skip
+    only their own script; the page's other structure stays."""
+    deep = "[" * 100_000 + "]" * 100_000
+    html = (
+        "<title>T</title><h1>H</h1>"
+        '<link rel="canonical" href="/c">'
+        '<script type="application/ld+json">{"@context": </script>'
+        f'<script type="application/ld+json">{deep}</script>'
+        '<script type="application/ld+json">{"@context":"c","@type":"t"}</script>'
+    )
+    s = extract_structure(html)
+    assert s["linked_data"] == [{"context": "c", "type": "t"}]
+    assert s["title"] == "T"
+    assert s["headings"] == [{"level": 1, "text": "H"}]
+    assert s["canonical"] == "/c"

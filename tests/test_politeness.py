@@ -1,18 +1,22 @@
-"""W5 politeness-batch strategy tests (round 4).
+"""W5 politeness batch: one per-host ``row_number() ≤ budget`` window.
 
-The three strategies must pick the IDENTICAL batch (the salted two-phase
-top-k is exact: the per-host top-budget is contained in the union of the
-per-salt top-budgets), and ``auto`` must route on Catalyst's
-windowGroupLimitThreshold — plain (optimizer-salted via map-side partial
-group limits) at small budgets, explicitly salted above it.
+The batch must equal a pure-Python per-host top-k under the priority
+order, and the select must keep Catalyst's map-side partial group limit
+(``WindowGroupLimit``) at budgets above Spark's default
+``windowGroupLimitThreshold`` by raising the session's threshold.
 """
 
 import pyspark.sql.functions as F
 import pytest
 
+from walker_spark.operators.politeness import select_fetch_batch
+
+THRESHOLD = "spark.sql.optimizer.windowGroupLimitThreshold"
+
 
 @pytest.fixture(scope="module")
 def frontier(spark):
+    # half the rows on hot.example (2,500); the 7 other hosts hold ~357 each
     base = spark.range(5000)
     host = F.when(F.col("id") % 2 == 0, F.lit("hot.example")).otherwise(
         F.format_string("host-%04d.example", (F.col("id") % 7).cast("int"))
@@ -25,48 +29,60 @@ def frontier(spark):
     ).cache()
 
 
+@pytest.fixture(autouse=True)
+def threshold(spark):
+    """The session's threshold before the test; restored afterwards so
+    that other tests' plans do not change."""
+    before = spark.conf.get(THRESHOLD)
+    yield int(before)
+    spark.conf.set(THRESHOLD, before)
+
+
+def _cols(rows):
+    return {tuple(r) for r in rows}
+
+
 def _batch_set(df):
-    return {tuple(r) for r in df.select("url", "host", "depth", "link_count").collect()}
+    return _cols(df.select("url", "host", "depth", "link_count").collect())
 
 
-def test_strategies_identical(frontier):
-    from walker_spark.operators.politeness import select_fetch_batch
-
-    plain = _batch_set(select_fetch_batch(frontier, 40, strategy="plain"))
-    salted = _batch_set(select_fetch_batch(frontier, 40, n_salts=8, strategy="salted"))
-    auto = _batch_set(select_fetch_batch(frontier, 40, strategy="auto"))
-    assert plain == salted == auto
-    # 8 hosts, every host has >= 40 candidates -> exact budget each
-    assert len(plain) == 8 * 40
-
-
-def test_auto_routes_on_group_limit_threshold(spark, frontier):
-    from walker_spark.operators.politeness import (
-        _window_group_limit_threshold,
-        select_fetch_batch,
-    )
-
-    thr = _window_group_limit_threshold(spark)
-
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    below = plan(select_fetch_batch(frontier, min(40, thr), strategy="auto"))
-    # optimizer-salted: partial (map-side) group limits before the exchange
-    assert "WindowGroupLimit" in below
-    assert "_salt" not in below
-    above = plan(select_fetch_batch(frontier, thr + 1, strategy="auto"))
-    # explicitly salted: the two-phase shard ranking
-    assert "_salt" in above
+def _oracle(frontier, budget):
+    """Per-host top-``budget`` by (depth asc, link_count desc, url asc)."""
+    by_host: dict[str, list] = {}
+    for r in frontier.collect():
+        by_host.setdefault(r["host"], []).append(tuple(r))
+    out = set()
+    for rows in by_host.values():
+        rows.sort(key=lambda t: (t[2], -t[3], t[0]))
+        out.update(rows[:budget])
+    return out
 
 
-def test_salted_exactness_under_binding_budget(frontier):
-    """Budget far below per-host counts, heavy (depth, link_count) ties:
-    the url-asc tiebreak makes the top-k unique, so plain and salted
-    must agree element-wise even where ties are dense."""
-    from walker_spark.operators.politeness import select_fetch_batch
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
 
-    plain = _batch_set(select_fetch_batch(frontier, 7, strategy="plain"))
-    salted = _batch_set(select_fetch_batch(frontier, 7, n_salts=4, strategy="salted"))
-    assert plain == salted
-    assert len(plain) == 8 * 7
+
+@pytest.mark.parametrize("budget", [7, 40, None], ids=["dense_ties", "40", "threshold+1"])
+def test_batch_matches_per_host_topk_oracle(frontier, threshold, budget):
+    """Budget 7 leaves dense (depth, link_count) ties, so the url-asc
+    tiebreak decides; at threshold + 1 the budget binds only on the hot
+    host, and every other host is taken whole."""
+    budget = budget or threshold + 1
+    got = _batch_set(select_fetch_batch(frontier, budget))
+    assert got == _oracle(frontier, budget)
+    assert sum(1 for t in got if t[1] == "hot.example") == budget
+
+
+def test_group_limit_above_default_threshold(spark, frontier, threshold):
+    plan = _plan(select_fetch_batch(frontier, threshold + 1))
+    # the map-side partial top-k still runs before the exchange
+    assert "WindowGroupLimit" in plan
+    assert "_salt" not in plan
+    assert int(spark.conf.get(THRESHOLD)) == threshold + 1
+
+
+def test_higher_session_threshold_left_unchanged(spark, frontier, threshold):
+    spark.conf.set(THRESHOLD, str(threshold + 500))
+    for budget in (40, threshold + 1):
+        assert "WindowGroupLimit" in _plan(select_fetch_batch(frontier, budget))
+        assert int(spark.conf.get(THRESHOLD)) == threshold + 500

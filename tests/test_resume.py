@@ -3,8 +3,10 @@ k and resumed from the manifest must end with byte-equal state to an
 uninterrupted run — same seen set, same results (urls, codes, depths,
 rounds), same round count."""
 
-import pytest
+import json
 import os
+
+import pytest
 
 import pyspark.sql.functions as F
 
@@ -143,16 +145,24 @@ def _kill_at_write(name, torn=False):
     return patch
 
 
-def _kill_before_manifest(mp, fired):
-    real = crawl.atomic_write_json
+def _kill_at_manifest(after):
+    """Raise at round KILL_ROUND's manifest write: before it, or once the
+    manifest is on disk."""
 
-    def write_json(path, obj):
-        if not fired and path.endswith("manifest.json") and obj["round"] == KILL_ROUND:
+    def patch(mp, fired):
+        real = crawl.atomic_write_json
+
+        def write_json(path, obj):
+            if fired or not path.endswith("manifest.json") or obj["round"] != KILL_ROUND:
+                return real(path, obj)
             fired.append(path)
+            if after:
+                real(path, obj)
             raise _Kill(path)
-        real(path, obj)
 
-    mp.setattr(crawl, "atomic_write_json", write_json)
+        mp.setattr(crawl, "atomic_write_json", write_json)
+
+    return patch
 
 
 @pytest.fixture(scope="module")
@@ -165,35 +175,59 @@ def small_site(spark, tmp_path_factory):
     ref = _mk_small(spark, paths, store, str(root / "ref"))
     summary = ref.run()
     assert summary["rounds"] > KILL_ROUND + 1  # the kill round is mid-crawl
+    # the kill round compacts, and the crawl resolves redirects
+    assert os.path.isdir(str(root / "ref" / f"seen_compact/r={KILL_ROUND:05d}"))
+    assert ref.results_df().filter(F.size("redirects") > 0).count() >= 1
     return paths, store, _end_state(ref, summary)
 
 
 def _mk_small(spark, paths, store, ckpt):
-    c = _mk(spark, paths, store, ckpt)  # 5 rounds on this site
+    c = _mk(spark, paths, store, ckpt)
     c.seen_compact_every = 2  # every round with new links compacts
+    # The budgeted crawl from the root reaches no redirect source on this
+    # site, so seed every host-0000 source too: each row of the redirect
+    # map matters, and the kill cases cross redirect resolution.
+    origin = "https://host-0000.example/"
+    c.seeds = [origin] + sorted(
+        r["src"]
+        for r in spark.read.parquet(paths["redirect_edges"]).collect()
+        if r["src"].startswith(origin)
+    )
     return c
 
 
 def _end_state(c, summary):
     key = lambda r: (r["url"], r["code"], r["depth"], r["round"])  # noqa: E731
+    with open(c.io.path("metrics.jsonl")) as f:
+        metric_rounds = [json.loads(line)["round"] for line in f]
     return (
         summary["rounds"],
         {r["url"] for r in c.seen_df().collect()},
         sorted(key(r) for r in c.results_df().collect()),
+        metric_rounds,
     )
 
 
 @pytest.mark.parametrize(
-    "kill",
+    "kill,manifest_round",
     [
-        _kill_at_write(f"rounds/r={KILL_ROUND:05d}/results"),
-        _kill_at_write(f"rounds/r={KILL_ROUND:05d}/frontier"),
-        _kill_before_manifest,
-        _kill_at_write(f"seen_compact/r={KILL_ROUND:05d}", torn=True),
+        (_kill_at_write(f"rounds/r={KILL_ROUND:05d}/results"), KILL_ROUND - 1),
+        (_kill_at_write(f"rounds/r={KILL_ROUND:05d}/frontier"), KILL_ROUND - 1),
+        (_kill_at_manifest(after=False), KILL_ROUND - 1),
+        (_kill_at_manifest(after=True), KILL_ROUND),
+        (_kill_at_write(f"seen_compact/r={KILL_ROUND:05d}", torn=True), KILL_ROUND - 1),
     ],
-    ids=["after_results", "after_frontier", "before_manifest", "mid_compaction"],
+    ids=[
+        "after_results",
+        "after_frontier",
+        "before_manifest",
+        "after_manifest",
+        "mid_compaction",
+    ],
 )
-def test_resume_after_kill_at_write_boundary(spark, tmp_path, small_site, kill):
+def test_resume_after_kill_at_write_boundary(
+    spark, tmp_path, small_site, kill, manifest_round
+):
     paths, store, want = small_site
     ckpt = str(tmp_path / "ck")
     fired: list[str] = []
@@ -201,40 +235,23 @@ def test_resume_after_kill_at_write_boundary(spark, tmp_path, small_site, kill):
         kill(mp, fired)
         with pytest.raises(_Kill):
             _mk_small(spark, paths, store, ckpt).run()
-    assert read_json(os.path.join(ckpt, "manifest.json"))["round"] == KILL_ROUND - 1
+    assert read_json(os.path.join(ckpt, "manifest.json"))["round"] == manifest_round
 
     resumed = _mk_small(spark, paths, store, ckpt)
     assert _end_state(resumed, resumed.run(resume=True)) == want
 
 
-
 def test_resume_after_torn_redirect_map(spark, tmp_path, small_site):
     """A kill inside the redirect-map commit, before its `_SUCCESS`
     marker: the resume must rebuild the map, not read the torn one."""
-    paths, store, _ = small_site
-    # The budgeted crawl from the root reaches no redirect source on this
-    # site, so seed every host-0000 source: each row of the map matters.
-    origin = "https://host-0000.example/"
-    srcs = sorted(
-        r["src"]
-        for r in spark.read.parquet(paths["redirect_edges"]).collect()
-        if r["src"].startswith(origin)
-    )
-
-    def mk(ckpt):
-        c = _mk_small(spark, paths, store, ckpt)
-        c.seeds = [origin] + srcs
-        return c
-
-    ref = mk(str(tmp_path / "ref"))
-    want = _end_state(ref, ref.run())
+    paths, store, want = small_site
     ckpt = str(tmp_path / "ck")
     with pytest.MonkeyPatch.context() as mp:
         _kill_at_write("redirect_map", torn=True)(mp, [])
         with pytest.raises(_Kill):
-            mk(ckpt).run()
+            _mk_small(spark, paths, store, ckpt).run()
     os.remove(os.path.join(ckpt, "redirect_map", "_SUCCESS"))
     assert not os.path.exists(os.path.join(ckpt, "manifest.json"))
 
-    resumed = mk(ckpt)
+    resumed = _mk_small(spark, paths, store, ckpt)
     assert _end_state(resumed, resumed.run(resume=True)) == want

@@ -98,3 +98,29 @@ def test_row_count_skips_uncommitted_files(spark, tmp_path):
     assert io.exists("t")
     os.remove(os.path.join(io.path("t"), "_SUCCESS"))
     assert not io.exists("t")
+
+
+class _StubSession:
+    """Answers ``spark.sql`` by raising ``error``."""
+
+    def __init__(self, error):
+        self.error = error
+
+    def sql(self, query):
+        raise self.error
+
+
+def _iceberg_io(error):
+    from walker_spark.sources.tables import IcebergTableIO
+
+    io = object.__new__(IcebergTableIO)
+    io.spark, io.catalog, io.namespace, io.root = _StubSession(error), "cat", "ns", "/r"
+    return io
+
+
+def test_legacy_namespace_probe_tolerates_only_analysis_errors():
+    from pyspark.errors import AnalysisException
+
+    _iceberg_io(AnalysisException(message="no such namespace"))._warn_if_legacy_namespace()
+    with pytest.raises(RuntimeError, match="catalog down"):
+        _iceberg_io(RuntimeError("catalog down"))._warn_if_legacy_namespace()

@@ -13,7 +13,6 @@ equivalents because it crawls live with a worker pool):
 * ``max_rounds``    — BSP safety stop (walker loops forever).
 * ``partitions``    — number of host-hash partitions P for the frontier /
   seen tables (``host_hash = xxhash64(host) % P``).
-* ``hot_host_salts``/``hot_host_threshold`` — skew handling (north rule).
 """
 
 from __future__ import annotations
@@ -52,8 +51,6 @@ class CrawlConfig:
     host_budget: int = 16
     max_rounds: int = 0  # 0 = run to fixpoint
     partitions: int = 32
-    hot_host_salts: int = 8
-    hot_host_threshold: int = 100_000
     # north-rule seen-keying: dedup the frontier on canonicalize(url)
     # (lowercase host, default-port strip, sorted query params) instead
     # of walker's raw normalized string; the lexicographically smallest

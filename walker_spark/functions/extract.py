@@ -261,7 +261,7 @@ def _structure_from_doc(d: _Doc) -> dict:
     for text in d.ldjson_texts:
         try:
             obj = json.loads(text)
-        except Exception:
+        except (ValueError, RecursionError):
             continue  # "json crap" → skipped, extract.go:42-45
         if not isinstance(obj, dict):
             # Go json.Unmarshal into a struct errors on non-objects → skip

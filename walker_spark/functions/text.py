@@ -273,7 +273,7 @@ def stratified_sample(
     ``InsertWindowGroupLimit`` rewrites it into a map-side partial
     top-k for k up to ``spark.sql.window.groupLimitThreshold`` (1000),
     so a hot stratum never materializes its full row set (same
-    mechanism the politeness batch op routes on, operators/
+    mechanism the politeness batch op relies on, operators/
     politeness.py). Output carries ``sample_rank`` (1-based within the
     stratum).
     """

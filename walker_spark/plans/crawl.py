@@ -591,6 +591,24 @@ class Crawler:
         with open(self.io.path("metrics.jsonl"), "a") as f:
             f.write(json.dumps(m.__dict__) + "\n")
 
+    def _trim_metrics(self, start_round: int) -> None:
+        """Keeps only the ``metrics.jsonl`` lines of rounds before
+        ``start_round``. A round appends its line before its manifest, so
+        a kill between the two leaves a line for a round that the resume
+        runs again; a kill inside the append leaves a torn last line."""
+        path = self.io.path("metrics.jsonl")
+        if not os.path.exists(path):
+            return
+        keep = []
+        with open(path) as f:
+            for line in f:
+                if not line.endswith("\n") or json.loads(line)["round"] >= start_round:
+                    break
+                keep.append(line)
+        with open(path + ".tmp", "w") as f:
+            f.writelines(keep)
+        os.replace(path + ".tmp", path)
+
     def run(self, resume: bool = False) -> dict:
         conf = self.conf
         io = self.io
@@ -666,6 +684,7 @@ class Crawler:
             seen_names = [frontier_dir]
             frontier_n = io.row_count(frontier_dir)
             seen_count = frontier_n
+        self._trim_metrics(start_round)
         frontier = (
             io.read(frontier_dir).select(*fcols) if frontier_n > 0 else None
         )
@@ -683,13 +702,7 @@ class Crawler:
             rd = f"rounds/r={r:05d}"
 
             t0 = time.time()
-            batch = select_fetch_batch(
-                frontier,
-                conf.host_budget,
-                conf.hot_host_salts,
-                self.record_order,
-                frontier_rows=frontier_n,
-            )
+            batch = select_fetch_batch(frontier, conf.host_budget, self.record_order)
             # When the whole frontier fits the per-host budget (each
             # host's rows ≤ total rows ≤ budget), the batch provably
             # equals the frontier: the leftover anti-join below is an
@@ -822,6 +835,9 @@ class Crawler:
                 lineage_t.join()
             if lineage_err:
                 raise lineage_err[0]
+            # metrics line first: the manifest marks the round complete,
+            # and a resume drops the line of any round it runs again
+            self._append_metrics(m)
             atomic_write_json(
                 self._manifest_path(),
                 {
@@ -836,7 +852,6 @@ class Crawler:
             frontier = (
                 io.read(frontier_dir).select(*fcols) if frontier_n > 0 else None
             )
-            self._append_metrics(m)
             r += 1
 
         wall = time.time() - t_start

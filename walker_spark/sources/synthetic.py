@@ -3,7 +3,7 @@
 Produces the ``pages`` table of BASELINE.json's ``input_hint``
 ``(url, warc_ts, html, text, lang)`` plus the ``redirect_edges`` and
 ``robots`` side tables, at any scale, from a seed — per FIXTURES.md §1:
-power-law host sizes (hot hosts exercise salting), out-degree 3-12,
+power-law host sizes (hot hosts exercise skew handling), out-degree 3-12,
 ~85% same-host links, ~2% broken links, ~3% redirect chains, ~1%
 noscript-wrapped links (the reference quirk, ``scrape.go:175-180``),
 duplicate/missing titles/descriptions/h1 for the SEO reports, pager

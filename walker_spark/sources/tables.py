@@ -23,6 +23,7 @@ import json
 import os
 import tempfile
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
@@ -250,7 +251,7 @@ class IcebergTableIO:
                         "it; otherwise the crawl will start fresh.",
                         stacklevel=3,
                     )
-        except Exception:
+        except AnalysisException:
             pass  # a catalog that can't SHOW yet is a fresh catalog
 
     def _ident(self, name: str) -> str:
