@@ -153,3 +153,44 @@ def test_invalid_and_deep_ldjson_skipped_structure_intact():
     assert s["title"] == "T"
     assert s["headings"] == [{"level": 1, "text": "H"}]
     assert s["canonical"] == "/c"
+
+
+# `<![` sections that stdlib html.parser rejects with an AssertionError;
+# WHATWG HTML makes each a bogus comment up to the next `>`
+_MARKED = ["<![foo[x]]>", "<![ x ]>", "<![if !IE]>", "<![CDATA[x]]>"]
+
+
+def test_anchors_after_marked_section_extracted():
+    from walker_spark.functions.dom import parse_dom
+    from walker_spark.functions.extract import extract_all, extract_anchor_texts
+
+    for sect in _MARKED:
+        html = f'<a href="/before">b</a>{sect}<a href="/after">a</a>'
+        assert extract_links(html) == {"/before": 1, "/after": 1}, sect
+        assert extract_all(html)[0] == {"/before": 1, "/after": 1}, sect
+        assert extract_anchor_texts(html) == [("/before", "b"), ("/after", "a")], sect
+        noscript = f"<noscript>{html}</noscript>"
+        assert extract_links(noscript) == {"/before": 1, "/after": 1}, sect
+        tags = [n.data for n in parse_dom(html).walk()]
+        assert tags == ["#document", "a", "a"], sect
+
+
+def test_tag_soup_fuzz_never_raises():
+    import random
+
+    from walker_spark.functions.dom import parse_dom
+    from walker_spark.functions.extract import extract_all, extract_anchor_texts
+
+    tokens = [
+        "<", ">", "<!", "<![", "[", "]", "]]>", "--", "<!--", "-->", "<?",
+        "<!DOCTYPE", "CDATA", "if", "a", " href=", '"', "'", "/", "=", " ",
+        "x", "&", "&#", ";", "\n", "<a ", "</a>", "<p>", "<title>", "<h1>",
+        "<noscript>", "</noscript>", "<script>", "</script>",
+        "<link rel=canonical href=/c>",
+    ]
+    rng = random.Random(20261020)
+    for _ in range(10_000):
+        html = "".join(rng.choice(tokens) for _ in range(rng.randrange(1, 40)))
+        extract_all(html)
+        extract_anchor_texts(html)
+        parse_dom(html)

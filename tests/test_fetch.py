@@ -50,3 +50,17 @@ def test_one_result_row_per_batch_row(spark):
     assert chain(loop) == loop_chain
     assert rows[redir]["link_norms"] == [f"{ORIGIN}/x"]
     assert rows[missing]["link_norms"] == []
+
+
+def test_page_with_marked_section_fetches(spark):
+    # a stray `<![` on one page used to raise inside the extract UDF and
+    # fail the whole results write
+    page = f"{ORIGIN}/page"
+    batch = spark.createDataFrame(
+        [(page, "host-0000.example", 1, 1, 0)],
+        "url string, host string, depth int, link_count long, batch_pos long",
+    )
+    html = bytearray(b"<html><![foo[x]]><a href='/x'>x</a></html>")
+    pages = spark.createDataFrame([(page, html)], "url string, html binary")
+    got = fetch_and_extract(batch, pages, None, 0, False, False, ORIGIN).collect()
+    assert [(r["code"], r["link_norms"]) for r in got] == [(200, [f"{ORIGIN}/x"])]

@@ -27,14 +27,18 @@ def _reference(edges, nodes, iters=5, d=0.85, q=12):
     return {v: round(r[v], 6) for v in nodes}
 
 
+# a graph with hubs, chains, a dangling sink, and (with nodes 0..10)
+# an isolated node
+_EDGES = (
+    [(0, i) for i in range(1, 6)]          # hub out
+    + [(i, 0) for i in range(1, 6)]        # hub in
+    + [(5, 6), (6, 7), (7, 8)]             # chain into dangling 8
+    + [(2, 9), (3, 9)]                     # 9: two in-links, dangling
+)
+
+
 def test_pagerank_matches_reference(spark):
-    # a graph with hubs, chains, a dangling sink, and an isolated node
-    edges = (
-        [(0, i) for i in range(1, 6)]          # hub out
-        + [(i, 0) for i in range(1, 6)]        # hub in
-        + [(5, 6), (6, 7), (7, 8)]             # chain into dangling 8
-        + [(2, 9), (3, 9)]                     # 9: two in-links, dangling
-    )
+    edges = _EDGES
     nodes = list(range(11))                    # 10 is isolated
     e = spark.createDataFrame(edges, "s long, t long")
     v = spark.createDataFrame([(x,) for x in nodes], "id long")
@@ -46,6 +50,28 @@ def test_pagerank_matches_reference(spark):
     # structure sanity: the hub outranks chain members; 9 > isolated 10
     assert got[0] == max(got.values())
     assert got[9] > got[10] > 0
+
+
+def test_pagerank_deep_loop_matches_reference(spark):
+    nodes = list(range(11))
+    e = spark.createDataFrame(_EDGES, "s long, t long")
+    v = spark.createDataFrame([(x,) for x in nodes], "id long")
+    got = {r["id"]: r["rank"] for r in pagerank(e, nodes=v, iterations=8).collect()}
+    assert got == _reference(_EDGES, nodes, iters=8)
+
+
+def test_pagerank_plan_size_flat_in_iterations(spark):
+    # each iteration ends in a checkpoint, so the plan handed to the
+    # optimizer holds one iteration whatever the count; an uncut loop
+    # re-plans the rank subtree once per reference, ~2^iterations
+    e = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)], "s long, t long")
+    v = spark.createDataFrame([(x,) for x in range(4)], "id long")
+
+    def plan_chars(iterations):
+        df = pagerank(e, nodes=v, iterations=iterations)
+        return len(df._jdf.queryExecution().optimizedPlan().toString())
+
+    assert plan_chars(6) <= plan_chars(3)
 
 
 def test_pagerank_edge_derived_nodes_and_empty(spark):

@@ -16,7 +16,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from html.parser import HTMLParser
 
-__all__ = ["Node", "parse_dom"]
+__all__ = ["Node", "TolerantHTMLParser", "parse_dom"]
 
 VOID = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
@@ -56,7 +56,22 @@ class Node:
                 yield from c.walk()
 
 
-class _TreeBuilder(HTMLParser):
+class TolerantHTMLParser(HTMLParser):
+    """``html.parser`` that never raises on a ``<![`` section.
+
+    The stdlib parses ``<![name[ ... ]]>`` as an SGML marked section and
+    raises ``AssertionError`` for any name it does not know (``<![foo[x]]>``,
+    ``<![ x ]>``), which kills the whole page. WHATWG HTML (§13.2.5.42,
+    markup declaration open state) and Go's ``x/net/html`` treat a ``<!``
+    that is not ``--``, DOCTYPE or foreign-content CDATA as a bogus
+    comment up to the next ``>``; so does this parser.
+    """
+
+    def parse_marked_section(self, i, report=1):
+        return self.parse_bogus_comment(i, report)
+
+
+class _TreeBuilder(TolerantHTMLParser):
     CDATA_CONTENT_ELEMENTS = ("script", "style")
 
     def __init__(self) -> None:

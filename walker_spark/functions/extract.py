@@ -27,9 +27,10 @@ per-row Python).
 from __future__ import annotations
 
 import json
-from html.parser import HTMLParser
 
 import pandas as pd
+
+from .dom import TolerantHTMLParser
 
 __all__ = [
     "TRIM_CHARS",
@@ -57,7 +58,7 @@ _VOID = frozenset(
 _HEADING_LEVEL = {"h1": 1, "h2": 2, "h3": 3, "h4": 4, "h5": 5, "h6": 6}
 
 
-class _Doc(HTMLParser):
+class _Doc(TolerantHTMLParser):
     """One-pass collector for everything walker's selectors touch.
 
     ``noscript`` joins script/style as CDATA so its content surfaces as
@@ -182,7 +183,7 @@ def _parse(html: str) -> _Doc:
     return d
 
 
-class _AnchorOnly(HTMLParser):
+class _AnchorOnly(TolerantHTMLParser):
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
         self.anchors: list[str] = []
@@ -222,11 +223,8 @@ def _links_from_doc(d: _Doc) -> dict[str, int]:
         links[href] = links.get(href, 0) + 1
     for text in d.noscript_texts:
         sub = _AnchorOnly()
-        try:
-            sub.feed(text)
-            sub.close()
-        except Exception:
-            continue
+        sub.feed(text)
+        sub.close()
         for href in sub.anchors:
             links[href] = links.get(href, 0) + 1
     return links
@@ -282,7 +280,7 @@ def extract_page(html: str) -> tuple[dict[str, int], dict]:
     return extract_links(html), extract_structure(html)
 
 
-class _AnchorTextCollector(HTMLParser):
+class _AnchorTextCollector(TolerantHTMLParser):
     """(href, visible text) per ``<a href>`` — NOT a reference op
     (walker counts hrefs only, ``scrape.go:159-190``); this feeds the
     anchor-text corpus rollup (:func:`walker_spark.operators.graph.
@@ -330,11 +328,8 @@ def extract_anchor_texts(html: str, base_url: str | None = None) -> list[tuple[s
     :func:`walker_spark.urlnorm.normalize_link` (unparseable links
     dropped, matching the crawl's silent-drop semantics)."""
     p = _AnchorTextCollector()
-    try:
-        p.feed(html)
-        p.close()
-    except Exception:
-        pass
+    p.feed(html)
+    p.close()
     if base_url is None:
         return p.pairs
     from ..urlnorm import normalize_link

@@ -110,22 +110,7 @@ def pagerank(
     return out
 
 
-# The per-iteration localCheckpoint converts the rank frame to an RDD
-# scan, which blocks whole-stage fusion across iterations and costs one
-# materialization per iteration — measured ~2× the whole loop's wall on
-# sandbox-sized graphs. But a fully fused loop re-executes the rank
-# subtree once per reference, and ranks is referenced twice per
-# iteration (contrib + dangling mass), so the un-cut plan re-computes
-# ~2^iterations tiny subtrees: fine for few iterations over a small
-# graph, catastrophic for either a deep loop or a web-scale graph.
-# Fuse only when BOTH are small; everything else keeps the original
-# checkpoint-per-iteration loop (constant plan size at any scale).
-_FUSE_MAX_ITERS = 6
-_FUSE_MAX_NODES = 2_000_000
-
-
 def _pagerank_loop(ranks, vd, e_deg, n, iterations, damping):
-    fused = int(iterations) <= _FUSE_MAX_ITERS and n <= _FUSE_MAX_NODES
     for _i in range(int(iterations)):
         contrib = (
             ranks.join(e_deg, ranks["__id"] == e_deg["__s"])
@@ -137,10 +122,9 @@ def _pagerank_loop(ranks, vd, e_deg, n, iterations, damping):
             .agg(F.sum("__c").alias("__in"))
         )
         # Dangling mass stays IN PLAN as a broadcast one-row aggregate —
-        # no per-iteration driver collect, so the whole fixed-iteration
-        # loop executes as ONE job instead of one action per iteration
-        # (the collects serialized an extra scheduling round-trip each,
-        # and the driver did data work the executors can do). The float
+        # no per-iteration driver collect (a collect serialized an extra
+        # scheduling round-trip each, and the driver did data work the
+        # executors can do). The float
         # expression tree replicates the historical driver-side
         # arithmetic operation for operation — ((1-d)/n, then
         # + (d * q(dangling)) / n, then + d * in) — and _q's
@@ -170,8 +154,7 @@ def _pagerank_loop(ranks, vd, e_deg, n, iterations, damping):
                 "__dang",
             )
         )
-        if not fused:
-            ranks = ranks.localCheckpoint(eager=False)
+        ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 

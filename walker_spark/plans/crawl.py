@@ -6,7 +6,7 @@ Per round (SURVEY.md §3.1 mapping of ``scrapeloop.go:202-368``):
   with redirect resolution) → vectorized extract (H1/H2, pandas UDF) →
   explode links → native filter stack (F1-F9) → exact anti-join vs seen
   (J2) → union into next frontier (SE3) → checkpoint
-  (batch order, results, frontier, seen delta, metrics) → repeat until
+  (results, frontier, seen delta, metrics) → repeat until
   the frontier drains (loop complete, ``scrapeloop.go:230-246``).
 
 Every stage materializes to the checkpoint (parquet now, Iceberg seam in
@@ -668,7 +668,6 @@ class Crawler:
             seen_names = list(manifest["seen_dirs"])
             frontier_dir = manifest["frontier_dir"]
             frontier_n = io.row_count(frontier_dir)
-            seen_count = sum(io.row_count(d) for d in seen_names)
         else:
             start_round = 0
             self.seeds = seeds_ok
@@ -683,7 +682,6 @@ class Crawler:
             io.write(frontier_df, frontier_dir)
             seen_names = [frontier_dir]
             frontier_n = io.row_count(frontier_dir)
-            seen_count = frontier_n
         self._trim_metrics(start_round)
         frontier = (
             io.read(frontier_dir).select(*fcols) if frontier_n > 0 else None
@@ -710,11 +708,7 @@ class Crawler:
             # the persist and the leftover plan are skipped outright.
             leftover_empty = 0 < frontier_n <= conf.host_budget
             persisted_batch = False
-            if self.record_order:
-                # durable batch files double as the crawl-order record
-                io.write(batch, f"{rd}/batch")
-                batch = io.read(f"{rd}/batch")
-            elif conf.host_budget > 0 and not leftover_empty:
+            if conf.host_budget > 0 and not leftover_empty:
                 # memory-persist: the batch feeds both the fetch join and
                 # the leftover anti-join; a parquet round-trip per round
                 # is pure overhead (resume is round-granular anyway).
@@ -793,9 +787,7 @@ class Crawler:
                 # is_new=true subdirectory IS the round's seen delta — no
                 # separate seen-delta write job, no second anti-join against
                 # the growing seen table.
-                new = seen_anti_join(
-                    cand, seen, key=seen_key, seen_rows=seen_count
-                ).select(*fcols)
+                new = seen_anti_join(cand, seen, key=seen_key).select(*fcols)
                 out = new.withColumn("is_new", F.lit(True))
                 if conf.host_budget > 0 and not leftover_empty:
                     # leftover = frontier ∖ batch; batch keys are small →
@@ -826,7 +818,6 @@ class Crawler:
                         io.write(io.read_many(seen_names).select(*fcols), cname)
                         seen_names = [cname]
                     seen = io.read_many(seen_names).select(F.col(seen_key).alias("url"))
-                seen_count += m.new_links
                 frontier_n = io.row_count(frontier_dir)
                 m.seconds["frontier"] = round(time.time() - t0, 3)
             finally:
@@ -943,24 +934,24 @@ class Crawler:
             if d.startswith("r=") and not d.endswith("-0001")
         ]
 
-    def results_df(self) -> DataFrame:
-        names = [
+    def _result_names(self) -> list[str]:
+        return [
             f"rounds/{d}/results"
             for d in self._round_dirs()
             if self.io.exists(f"rounds/{d}/results")
         ]
-        return self.io.read_many(names)
 
-    def order_df(self) -> DataFrame:
-        dfs = None
-        for d in self._round_dirs():
-            if not self.io.exists(f"rounds/{d}/batch"):
-                continue
-            rdf = self.io.read(f"rounds/{d}/batch").withColumn(
-                "round", F.lit(int(d[2:]))
-            )
-            dfs = rdf if dfs is None else dfs.unionByName(rdf)
-        return dfs
+    def results_df(self) -> DataFrame:
+        return self.io.read_many(self._result_names())
+
+    def order_df(self) -> DataFrame | None:
+        """The crawl order, ``(round, batch_pos, url)``, read from the
+        results (one row per batch row); ``batch_pos`` is set only with
+        ``record_order``. None before any round."""
+        names = self._result_names()
+        if not names:
+            return None
+        return self.io.read_many(names).select("round", "batch_pos", "url")
 
     def seen_df(self) -> DataFrame:
         manifest = read_json(self._manifest_path())
