@@ -28,10 +28,6 @@ def explain_str(df) -> str:
     return buf.getvalue()
 
 
-def section_md(title: str, note: str, plan: str) -> list[str]:
-    return [f"## {title}", "", note, "", "```", plan.strip()[:6000], "```", ""]
-
-
 def seen_and_pagerank_sections(spark) -> list[tuple[str, str, str]]:
     """J2 at the default broadcast threshold and at -1, and the plan of
     one PageRank iteration: the two operators with no size gate left."""
@@ -49,9 +45,6 @@ def seen_and_pagerank_sections(spark) -> list[tuple[str, str, str]]:
             F.lit(1).cast("long").alias("link_count"),
         )
 
-    seen_dir = tempfile.mkdtemp(prefix="walker_spark_plans_seen_")
-    frontier(spark.range(100_000)).write.mode("overwrite").parquet(seen_dir)
-    seen = spark.read.parquet(seen_dir).select("url")
     cands = frontier(spark.range(50_000, 150_000)).groupBy("url").agg(
         F.min("host").alias("host"),
         F.min("depth").alias("depth"),
@@ -59,10 +52,15 @@ def seen_and_pagerank_sections(spark) -> list[tuple[str, str, str]]:
     )
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
-    j2_default = explain_str(seen_anti_join(cands, seen))
-    spark.conf.set(key, "-1")
-    j2_shuffle = explain_str(seen_anti_join(cands, seen))
-    spark.conf.set(key, old)
+    with tempfile.TemporaryDirectory(prefix="walker_spark_plans_seen_") as seen_dir:
+        frontier(spark.range(100_000)).write.mode("overwrite").parquet(seen_dir)
+        seen = spark.read.parquet(seen_dir).select("url")
+        j2_default = explain_str(seen_anti_join(cands, seen))
+        spark.conf.set(key, "-1")
+        try:
+            j2_shuffle = explain_str(seen_anti_join(cands, seen))
+        finally:
+            spark.conf.set(key, old)
 
     # the plan each iteration hands to its localCheckpoint
     e = spark.range(10_000).select(
@@ -211,7 +209,7 @@ def main():
            "come from.",
            ""]
     for title, note, plan in sections:
-        out += section_md(title, note, plan)
+        out += [f"## {title}", "", note, "", "```", plan.strip()[:6000], "```", ""]
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")

@@ -22,7 +22,10 @@ Scale shape per iteration (the standard distributed PageRank plan):
   redistributed uniformly per the standard formulation;
 * ``localCheckpoint`` per iteration cuts the lineage exactly like the
   connected-components loop (operators/dedup.py) — constant plan size
-  at any iteration count.
+  at any iteration count. A fused loop without the checkpoint was
+  measured slower at every size from 50 to 200k nodes, because its plan
+  grows ~2^iterations (BENCH.md, "Seen and PageRank: the last two size
+  gates").
 """
 
 from __future__ import annotations
@@ -121,10 +124,9 @@ def _pagerank_loop(ranks, vd, e_deg, n, iterations, damping):
             .groupBy("__id")
             .agg(F.sum("__c").alias("__in"))
         )
-        # Dangling mass stays IN PLAN as a broadcast one-row aggregate —
-        # no per-iteration driver collect (a collect serialized an extra
-        # scheduling round-trip each, and the driver did data work the
-        # executors can do). The float
+        # Dangling mass stays IN PLAN as a broadcast one-row aggregate:
+        # a per-iteration driver collect would add a scheduling
+        # round-trip and do executor work on the driver. The float
         # expression tree replicates the historical driver-side
         # arithmetic operation for operation — ((1-d)/n, then
         # + (d * q(dangling)) / n, then + d * in) — and _q's

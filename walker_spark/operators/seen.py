@@ -8,7 +8,7 @@ join side: ``spark.sql.autoBroadcastJoinThreshold`` broadcasts a seen
 table whose scan-size estimate is under it, and AQE re-plans from the
 shuffle's measured size. A hand-placed broadcast below a row count was
 measured and removed: it changed the plan only where its forced
-broadcast lost (BENCH.md, "Seen and PageRank: the last two size
+broadcast did not win (BENCH.md, "Seen and PageRank: the last two size
 gates"). A Bloom prefilter in front of this join was removed too
 (BENCH.md, "Seen: Bloom prefilter vs exact anti-join"): the maybe-seen
 slice still scans the whole seen table, so the filter only added a
