@@ -52,7 +52,6 @@ def _run_spark_crawl(spark, paths, store, conf, ckpt, **kw):
         redirect_edges=spark.read.parquet(paths["redirect_edges"]),
         robots_bodies=store.robots,
         checkpoint_dir=ckpt,
-        record_order=True,
         **kw,
     )
     summary = crawler.run()
@@ -189,7 +188,6 @@ def test_multi_host_crawl_parity(spark, site, tmp_path):
         checkpoint_dir=str(tmp_path / "ck4"),
         multi_host=True,
         seeds=seeds,
-        record_order=False,
     )
     crawler.run()
     spark_seen = {r["url"] for r in crawler.seen_df().collect()}

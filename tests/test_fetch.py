@@ -13,8 +13,8 @@ def test_one_result_row_per_batch_row(spark):
     redir, redir2, loop = f"{ORIGIN}/redir", f"{ORIGIN}/redir2", f"{ORIGIN}/loop"
     urls = [page, missing, redir, loop, redir2]
     batch = spark.createDataFrame(
-        [(u, "host-0000.example", 1, 1, i) for i, u in enumerate(urls)],
-        "url string, host string, depth int, link_count long, batch_pos long",
+        [(u, "host-0000.example", 1, i + 1) for i, u in enumerate(urls)],
+        "url string, host string, depth int, link_count long",
     )
     loop_chain = [(302, f"{ORIGIN}/loop{i}") for i in range(10)]
     redirect_map = spark.createDataFrame(
@@ -36,6 +36,10 @@ def test_one_result_row_per_batch_row(spark):
 
     assert sorted(r["url"] for r in got) == sorted(urls)
     rows = {r["url"]: r for r in got}
+    # each result keeps its batch row's link_count, whatever the fetch did
+    assert {u: r["link_count"] for u, r in rows.items()} == {
+        u: i + 1 for i, u in enumerate(urls)
+    }
     want = {
         page: (200, ""),
         missing: (404, ""),
@@ -57,10 +61,12 @@ def test_page_with_marked_section_fetches(spark):
     # fail the whole results write
     page = f"{ORIGIN}/page"
     batch = spark.createDataFrame(
-        [(page, "host-0000.example", 1, 1, 0)],
-        "url string, host string, depth int, link_count long, batch_pos long",
+        [(page, "host-0000.example", 1, 3)],
+        "url string, host string, depth int, link_count long",
     )
     html = bytearray(b"<html><![foo[x]]><a href='/x'>x</a></html>")
     pages = spark.createDataFrame([(page, html)], "url string, html binary")
     got = fetch_and_extract(batch, pages, None, 0, False, False, ORIGIN).collect()
-    assert [(r["code"], r["link_norms"]) for r in got] == [(200, [f"{ORIGIN}/x"])]
+    assert [(r["code"], r["link_count"], r["link_norms"]) for r in got] == [
+        (200, 3, [f"{ORIGIN}/x"])
+    ]

@@ -108,8 +108,8 @@ def test_link_list_filter_error_lands_in_its_row(spark):
 
     urls = ["https://host-0000.example/good", "https://host-0000.example/bad"]
     batch = spark.createDataFrame(
-        [(u, "host-0000.example", 0, 1, i) for i, u in enumerate(urls)],
-        "url string, host string, depth int, link_count long, batch_pos long",
+        [(u, "host-0000.example", 0, i + 1) for i, u in enumerate(urls)],
+        "url string, host string, depth int, link_count long",
     )
     pages = spark.createDataFrame(
         [(u, bytearray(b"<html><a href='/x'>x</a></html>")) for u in urls],
@@ -122,6 +122,7 @@ def test_link_list_filter_error_lands_in_its_row(spark):
             link_list_filter=link_filter_hook,
         ).collect()
     }
+    assert [rows[u]["link_count"] for u in urls] == [1, 2]
     assert "hook failed on bad" in rows[urls[1]]["error"]
     assert not rows[urls[1]]["custom_links"]
     assert rows[urls[0]]["error"] == ""

@@ -129,7 +129,7 @@ def test_resume_rejects_old_manifest(spark, tmp_ckpt):
 
 
 def test_minhash_eager_releases_cache(spark, docs_with_nulls):
-    """eager=True (default) must leave no persisted RDDs behind once the
+    """minhash_lsh_pairs must leave no persisted RDDs behind once the
     result is materialized (ADVICE: bench/loop callers invoke repeatedly)."""
     from walker_spark.operators.dedup import minhash_lsh_pairs
 

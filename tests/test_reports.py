@@ -14,7 +14,7 @@ def _mk_results(spark):
             ct="text/html"):
         return {
             "url": url, "host": "h.example", "depth": 0, "round": 0,
-            "batch_pos": 0, "code": code, "status": f"{code} X",
+            "link_count": 0, "code": code, "status": f"{code} X",
             "content_type": ct, "group": group, "error": "",
             "duration_us": dur_ms * 1000, "time_us": 0,
             "redirects": redirects or [],

@@ -5,6 +5,8 @@ rounds), same round count."""
 
 import json
 import os
+import threading
+import time
 
 import pytest
 
@@ -14,7 +16,7 @@ from walker_spark.config import CrawlConfig, Target
 from walker_spark.plans import crawl
 from walker_spark.plans.crawl import Crawler
 from walker_spark.sources.synthetic import SiteSpec, build_store, write_pages_tables
-from walker_spark.sources.tables import ParquetTableIO, read_json
+from walker_spark.sources.tables import ParquetTableIO, atomic_write_json, read_json
 
 
 def _mk(spark, paths, store, ckpt, max_rounds=0):
@@ -288,3 +290,59 @@ def test_resume_after_torn_redirect_map(spark, tmp_path, small_site):
 
     resumed = _mk_small(spark, paths, store, ckpt)
     assert _end_state(resumed, resumed.run(resume=True)) == want
+
+
+def test_resume_rejects_manifest_without_format(spark, tmp_path, small_site):
+    """A manifest with no format stamp comes from a checkpoint whose
+    results have another schema: the resume refuses it before it writes
+    anything, instead of mixing the two."""
+    paths, store, _ = small_site
+    ckpt = str(tmp_path / "ck")
+    frontier = "rounds/r=-0001/frontier"
+    atomic_write_json(
+        os.path.join(ckpt, "manifest.json"),
+        {"round": 0, "frontier_dir": frontier, "frontier_rows": 3, "seen_dirs": [frontier]},
+    )
+    with pytest.raises(RuntimeError, match="incompatible checkpoint version"):
+        _mk_small(spark, paths, store, ckpt).run(resume=True)
+    assert sorted(os.listdir(ckpt)) == ["manifest.json"]
+
+
+@pytest.mark.parametrize("fail", ["incompatible_manifest", "setup"])
+def test_failed_run_leaves_no_redirect_writer(spark, tmp_path, small_site, fail):
+    """A run that raises before its first round must not leave the
+    redirect-map writer running into the checkpoint."""
+    from pyspark import InheritableThread
+
+    paths, store, _ = small_site
+    ckpt = str(tmp_path / "ck")
+    before = set(threading.enumerate())
+    real = crawl.resolve_redirects
+
+    def slow_resolve(edges):
+        time.sleep(2)  # still resolving when the failure surfaces
+        return real(edges)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(crawl, "resolve_redirects", slow_resolve)
+        c = _mk_small(spark, paths, store, ckpt)
+        if fail == "setup":
+
+            def trim(self, start_round):
+                raise _Kill("metrics")
+
+            mp.setattr(Crawler, "_trim_metrics", trim)
+            with pytest.raises(_Kill):
+                c.run()
+        else:
+            atomic_write_json(
+                os.path.join(ckpt, "manifest.json"), {"round": 2, "frontier_rows": 10}
+            )
+            with pytest.raises(RuntimeError, match="incompatible checkpoint version"):
+                c.run(resume=True)
+        alive = [
+            t
+            for t in threading.enumerate()
+            if t not in before and isinstance(t, InheritableThread) and t.is_alive()
+        ]
+        assert not alive

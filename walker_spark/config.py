@@ -22,7 +22,7 @@ from urllib.parse import urlsplit
 
 try:
     import yaml  # type: ignore
-except Exception:  # pragma: no cover - yaml is stdlib-adjacent but optional
+except ImportError:  # pragma: no cover - yaml is stdlib-adjacent but optional
     yaml = None
 
 __all__ = ["Target", "CrawlConfig", "load_config", "sort_paths_by_length"]

@@ -223,7 +223,7 @@ class ReferenceDispatcher:
                     round_no=round_no,
                     batch_pos=pos,
                     duration_us=synthetic_duration_us(url),
-                    time_us=synthetic_time_us(round_no, pos),
+                    time_us=synthetic_time_us(round_no),
                 )
                 page, chain, err = self._fetch(url)
                 r.redirects = chain

@@ -18,17 +18,14 @@ Parity reimplementation of the reference extractors on stdlib
   text trimmed of exactly ``" \\t\\n"`` (``extract.go:12-14`` — \\r is
   NOT trimmed).
 
-The Spark face of this module is :func:`extract_batch` /
-:func:`make_extract_udfs` — ``Iterator[pd.Series]``-style vectorized
-pandas UDFs so Arrow batches amortize Python dispatch (input_hint: no
-per-row Python).
+The Spark extract stage (``plans/crawl.py::fetch_and_extract``) calls
+:func:`extract_all` once per page inside its ``mapInPandas`` batch loop,
+so one parse yields the links, the structure and the text.
 """
 
 from __future__ import annotations
 
 import json
-
-import pandas as pd
 
 from .dom import TolerantHTMLParser
 
@@ -38,10 +35,9 @@ __all__ = [
     "extract_links",
     "extract_anchor_texts",
     "extract_structure",
-    "extract_page",
+    "extract_all",
     "extract_text",
     "STRUCTURE_SPARK_TYPE",
-    "extract_batch",
 ]
 
 TRIM_CHARS = " \t\n"  # extract.go:12-14 — space, tab, newline only
@@ -275,11 +271,6 @@ def _structure_from_doc(d: _Doc) -> dict:
     return s
 
 
-def extract_page(html: str) -> tuple[dict[str, int], dict]:
-    """(links, structure) in one parse-amortized call."""
-    return extract_links(html), extract_structure(html)
-
-
 class _AnchorTextCollector(TolerantHTMLParser):
     """(href, visible text) per ``<a href>`` — NOT a reference op
     (walker counts hrefs only, ``scrape.go:159-190``); this feeds the
@@ -348,25 +339,8 @@ def extract_all(html: str) -> tuple[dict[str, int], dict, str]:
     :func:`extract_links` / :func:`extract_structure` /
     :func:`extract_text` separately (all derive from the same ``_Doc``)."""
     d = _parse(html)
-    # links (scrape.go:159-190)
-    links = _links_from_doc(d)
-    # structure (extract.go:17-70)
-    s = _structure_from_doc(d)
-    # text (engine contract)
-    parts: list[str] = []
-    if d.title:
-        t = trim_text(d.title)
-        if t:
-            parts.append(t)
-    for _, buf in d.headings:
-        t = trim_text("".join(buf))
-        if t:
-            parts.append(t)
-    for buf in d.paragraphs:
-        t = trim_text("".join(buf))
-        if t:
-            parts.append(t)
-    return links, s, "\n".join(parts)
+    # links (scrape.go:159-190), structure (extract.go:17-70), text
+    return _links_from_doc(d), _structure_from_doc(d), _text_from_doc(d)
 
 
 def extract_text(html: str) -> str:
@@ -376,7 +350,10 @@ def extract_text(html: str) -> str:
     extractor (SURVEY.md §2.8 H3); this is our spec, and the synthetic
     ``pages`` generator writes the same function's output so pytest can
     assert byte-identity end to end."""
-    d = _parse(html)
+    return _text_from_doc(_parse(html))
+
+
+def _text_from_doc(d: _Doc) -> str:
     parts: list[str] = []
     if d.title:
         t = trim_text(d.title)
@@ -401,21 +378,3 @@ STRUCTURE_SPARK_TYPE = (
     "canonical:string,link_prev:string,link_next:string>"
 )
 
-
-def _decode(b) -> str:
-    if b is None:
-        return ""
-    if isinstance(b, (bytes, bytearray)):
-        return bytes(b).decode("utf-8", errors="replace")
-    return str(b)
-
-
-def extract_batch(html_series: pd.Series) -> pd.DataFrame:
-    """Vectorized core used by the fetch/extract mapInPandas stage:
-    html binary → DataFrame(links dict, structure dict)."""
-    links_out, struct_out = [], []
-    for b in html_series:
-        links, struct = extract_page(_decode(b))
-        links_out.append(links)
-        struct_out.append(struct)
-    return pd.DataFrame({"links": links_out, "structure": struct_out})

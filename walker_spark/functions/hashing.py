@@ -11,6 +11,12 @@ stand-in for walker's measured request duration (``scrape.go:68``): in a
 table-backed fetch there is no live HTTP, so the duration becomes a pure
 function of the URL, spread over walker's 10 latency buckets
 (``vo/bucketlist.go:13-66``, 0ms … >10s).
+
+``synthetic_time_us`` is the matching stand-in for walker's receipt
+timestamp. It is round-granular: every result of a round carries the same
+value, because the crawl does not record a row's position in its batch
+(the crawl order is derived from the results when it is read). Nothing
+in the engine reads ``time_us``; it keeps the result schema's column.
 """
 
 from __future__ import annotations
@@ -39,8 +45,7 @@ def synthetic_duration_us(url: str) -> int:
     return ms * 1000 + h % 1000
 
 
-def synthetic_time_us(round_no: int, batch_pos: int) -> int:
+def synthetic_time_us(round_no: int) -> int:
     """Deterministic result-receipt timestamp (walker stamps wall-clock at
-    integrate time, ``scrapeloop.go:325``): fixed epoch + 1s per round +
-    1µs per batch position."""
-    return _EPOCH_US + round_no * 1_000_000 + batch_pos
+    integrate time, ``scrapeloop.go:325``): fixed epoch + 1s per round."""
+    return _EPOCH_US + round_no * 1_000_000

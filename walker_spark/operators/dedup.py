@@ -36,7 +36,6 @@ __all__ = [
     "exact_dedup",
     "shingle_expr",
     "minhash_signature_expr",
-    "minhash_band_expr",
     "minhash_buckets_udf",
     "minhash_text_buckets_udf",
     "minhash_lsh_pairs",
@@ -311,40 +310,6 @@ def minhash_signature_expr(shingles: Column, num_hashes: int = 64) -> Column:
     )
 
 
-def minhash_band_expr(
-    shingles: Column, num_hashes: int, bands: int
-) -> Column:
-    """Band bucket hashes array<long>[bands], computed in the same
-    single ``aggregate`` pass as the signature (the banding runs in the
-    fold's ``finish`` lambda over the materialized accumulator, so the
-    signature is never re-evaluated per band). Bucket values are
-    identical to hashing the sliced signature directly."""
-    rows_per_band = num_hashes // bands
-    seeds = F.sequence(F.lit(0).cast("long"), F.lit(num_hashes - 1).cast("long"))
-    init = F.array_repeat(F.lit(_MAX_LONG).cast("long"), num_hashes)
-    return F.aggregate(
-        shingles,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(seeds, lambda s: F.xxhash64(h, s)),
-            lambda a, b: F.least(a, b),
-        ),
-        lambda acc: F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.slice(acc, b * rows_per_band + 1, rows_per_band),
-                        lambda v: v.cast("string"),
-                    ),
-                )
-            ),
-        ),
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -354,20 +319,16 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     jaccard_threshold: float = 0.7,
     max_bucket: int = 200,
-    eager: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash+LSH, exact-Jaccard verified.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
 
-    ``eager`` (default) materializes the verified pair set (a tiny
-    result relative to the corpus) via ``localCheckpoint`` and releases
-    the internal candidate cache before returning — repeated calls in a
+    The verified pair set (a tiny result relative to the corpus) is
+    materialized via ``localCheckpoint`` and the internal candidate
+    caches are released before returning — repeated calls in a
     long-lived session (bench loops, re-crawl loops) would otherwise
     accumulate persisted band-join partitions for the session lifetime.
-    ``eager=False`` returns the fully lazy plan (the caller owns the
-    lifecycle of the internal persist — one-shot pipelines that write
-    the result and exit).
     """
     # NULL text rows (fetch errors, non-HTML) are not candidates for
     # near-duplication — without this filter they'd all share the
@@ -436,14 +397,13 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    if eager:
-        # materialize the (small) verified pair set, then drop the
-        # candidate caches — the checkpointed blocks are the output rows
-        # only, and Spark's ContextCleaner reclaims them once the
-        # returned DataFrame is unreferenced.
-        verified = verified.localCheckpoint(eager=True)
-        pair_ids.unpersist()
-        capped.unpersist()
+    # materialize the (small) verified pair set, then drop the candidate
+    # caches — the checkpointed blocks are the output rows only, and
+    # Spark's ContextCleaner reclaims them once the returned DataFrame
+    # is unreferenced.
+    verified = verified.localCheckpoint(eager=True)
+    pair_ids.unpersist()
+    capped.unpersist()
     return verified
 
 
@@ -506,8 +466,6 @@ def simhash_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     max_bucket: int | None = 200,
-    eager: bool = True,
-    cache_banding: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance ≤ max_hamming.
 
@@ -521,9 +479,9 @@ def simhash_pairs(
     it, making the banding provably lossless — the setting the exact
     DuckDB oracle assumes (ADVICE r3: the capped path only matched
     because the measured max bucket at sf0.01 was 153 < 200).
-    ``eager``: see :func:`minhash_lsh_pairs`. ``cache_banding``:
-    persist the (band, bucket, id, lsim) frame across the self-join so
-    the corpus scan + signature pass run once instead of twice.
+    The (band, bucket, id, lsim) frame is persisted across the self-join
+    so the corpus scan + signature pass run once instead of twice, and
+    the pair set is materialized as in :func:`minhash_lsh_pairs`.
     """
     segs = max_hamming + 1
     seg_bits = 64 // segs
@@ -591,12 +549,11 @@ def simhash_pairs(
         capped = banded.withColumn("_rn", F.row_number().over(w)).filter(
             F.col("_rn") <= max_bucket
         ).select("band", "bucket", "id", "lsim")
-    if cache_banding:
-        # persisted across the self-join: Spark does not reuse the
-        # scan → sim_udf → explode → cap subplan between the two aliased
-        # sides (see minhash_lsh_pairs), so without this the corpus is
-        # scanned and the signature UDF runs twice
-        capped = capped.persist()
+    # persisted across the self-join: Spark does not reuse the
+    # scan → sim_udf → explode → cap subplan between the two aliased
+    # sides (see minhash_lsh_pairs), so without this the corpus is
+    # scanned and the signature UDF runs twice
+    capped = capped.persist()
     a = capped.select("band", "bucket", F.col("id").alias("id_a"), F.col("lsim").alias("l_a"))
     b = capped.select("band", "bucket", F.col("id").alias("id_b"), F.col("lsim").alias("l_b"))
     pairs = (
@@ -611,11 +568,10 @@ def simhash_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    if eager and cache_banding:
-        # see minhash_lsh_pairs: materialize the small pair set, release
-        # the banding cache so repeated calls don't accumulate blocks
-        result = result.localCheckpoint(eager=True)
-        capped.unpersist()
+    # see minhash_lsh_pairs: materialize the small pair set, release
+    # the banding cache so repeated calls don't accumulate blocks
+    result = result.localCheckpoint(eager=True)
+    capped.unpersist()
     return result
 
 

@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .frontier import url_host_expr
+
 __all__ = [
     "pagerank",
     "hits",
@@ -293,17 +295,9 @@ def host_graph(
     aggregation that makes whole-web centrality tractable (run
     :func:`pagerank`/:func:`hits` on its output).
     """
-
-    def host_of(c):
-        return F.lower(
-            F.regexp_extract(
-                F.col(c), r"^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]+)", 1
-            )
-        )
-
     e = links.select(
-        host_of(src_col).alias("src_host"),
-        host_of(dst_col).alias("dst_host"),
+        url_host_expr(src_col).alias("src_host"),
+        url_host_expr(dst_col).alias("dst_host"),
         F.col(src_col).alias("__s"),
         F.col(dst_col).alias("__t"),
     )

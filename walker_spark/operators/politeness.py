@@ -31,11 +31,7 @@ def priority_order():
     return [F.col("depth").asc(), F.col("link_count").desc(), F.col("url").asc()]
 
 
-def select_fetch_batch(
-    frontier: DataFrame,
-    host_budget: int,
-    record_order: bool = False,
-) -> DataFrame:
+def select_fetch_batch(frontier: DataFrame, host_budget: int) -> DataFrame:
     """Returns the round's fetch batch (leftover = frontier ∖ batch is the
     caller's anti-join, done against the *materialized* batch so the
     window isn't recomputed).
@@ -46,16 +42,11 @@ def select_fetch_batch(
     A budget above the session's ``windowGroupLimitThreshold`` raises
     that session setting to the budget; a higher value is left alone.
 
-    With ``record_order`` the batch gains a round-global ``batch_pos``
-    (host-ascending, then priority) — a single-partition sort used only
-    by parity tests and small crawls; production leaves ordering implicit.
+    The batch carries no order of its own: the crawl order is read back
+    from the results (``Crawler.order_df``).
     """
     if host_budget <= 0:
-        batch = frontier
-        if record_order:
-            w = Window.orderBy(F.col("host").asc(), *priority_order())
-            batch = batch.withColumn("batch_pos", F.row_number().over(w) - 1)
-        return batch
+        return frontier
 
     # The optimizer reads the threshold when the returned plan executes,
     # which is after this call returns, so the raised value has to stay
@@ -66,11 +57,8 @@ def select_fetch_batch(
     if int(conf.get(key)) < host_budget:
         conf.set(key, str(host_budget))
     w_host = Window.partitionBy("host").orderBy(*priority_order())
-    batch = (
+    return (
         frontier.withColumn("_rh", F.row_number().over(w_host))
         .filter(F.col("_rh") <= host_budget)
+        .drop("_rh")
     )
-    if record_order:
-        w = Window.orderBy(F.col("host").asc(), *priority_order())
-        batch = batch.withColumn("batch_pos", F.row_number().over(w) - 1)
-    return batch.drop("_rh")

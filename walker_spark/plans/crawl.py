@@ -31,7 +31,7 @@ import time
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
@@ -40,7 +40,7 @@ from ..functions.extract import STRUCTURE_SPARK_TYPE, extract_all
 from ..functions.hashing import synthetic_duration_us, synthetic_time_us
 from ..functions.robots import parse_robots
 from ..operators.linkfilter import apply_link_filters, authority_of, scheme_of
-from ..operators.politeness import select_fetch_batch
+from ..operators.politeness import priority_order, select_fetch_batch
 from ..operators.seen import seen_anti_join
 from ..sources.tables import atomic_write_json, make_table_io, read_json
 from ..urlnorm import normalize_link, url_host, url_path
@@ -53,7 +53,7 @@ VALIDATION_REPORT_TYPE = (
 )
 
 RESULT_SCHEMA = (
-    "url string, host string, depth int, round int, batch_pos long, "
+    "url string, host string, depth int, round int, link_count long, "
     "code int, status string, content_type string, group string, error string, "
     "duration_us long, time_us long, "
     "redirects array<struct<code:int,url:string>>, "
@@ -69,6 +69,10 @@ RESULT_SCHEMA = (
 FRONTIER_COLS = ["url", "host", "depth", "link_count"]
 
 RESULT_COLUMNS = [f.strip().split(" ")[0] for f in RESULT_SCHEMA.split(", ")]
+
+# Stamped in manifest.json; a resume refuses any other value. Older
+# checkpoints carry no stamp, and their results have another schema.
+_CHECKPOINT_FORMAT = 2
 
 
 def resolve_redirects(redirects: DataFrame, cap: int = REDIRECT_CAP) -> DataFrame:
@@ -193,6 +197,10 @@ def fetch_and_extract(
 ) -> DataFrame:
     """J1 + H1/H2: the fetch join and the vectorized extract stage.
 
+    ``batch`` columns: url, host, depth, link_count. Each result row
+    keeps its batch row's depth and link_count, so the round's crawl
+    order can be derived from the results (``Crawler.order_df``).
+
     Column pruning matters at 100 TB: only ``url`` and ``html`` of
     ``pages`` are read (the parquet scan never touches ``text``/``lang``
     here), and the html binary exists only inside this stage.
@@ -218,28 +226,23 @@ def fetch_and_extract(
     (level/message/group) fills ``validations``. Both run inside the
     same Arrow batch loop (no extra pass over the page).
     """
-    b = batch
-    if "batch_pos" not in b.columns:
-        b = b.withColumn("batch_pos", F.lit(-1).cast("long"))
     if redirect_map is not None:
-        j = b.join(redirect_map.withColumnRenamed("src", "url"), "url", "left")
+        j = batch.join(redirect_map.withColumnRenamed("src", "url"), "url", "left")
         j = j.select(
             "url",
             "host",
             "depth",
             "link_count",
-            "batch_pos",
             F.coalesce(F.col("final_url"), F.col("url")).alias("final_url"),
             F.coalesce(F.col("redirects"), F.array().cast("array<struct<code:int,url:string>>")).alias("redirects"),
             F.coalesce(F.col("error"), F.lit("")).alias("fetch_error"),
         )
     else:
-        j = b.select(
+        j = batch.select(
             "url",
             "host",
             "depth",
             "link_count",
-            "batch_pos",
             F.col("url").alias("final_url"),
             F.array().cast("array<struct<code:int,url:string>>").alias("redirects"),
             F.lit("").alias("fetch_error"),
@@ -262,6 +265,7 @@ def fetch_and_extract(
 
     def extract_fn(batches):
         status_200, status_404 = _status_line(200), _status_line(404)
+        time_us = synthetic_time_us(rn)
         for pdf in batches:
             # Columnar accumulation: one python list per output column,
             # one pd.DataFrame built from the dict of lists per batch.
@@ -271,7 +275,7 @@ def fetch_and_extract(
             # identical either way).
             cols: dict[str, list] = {c: [] for c in RESULT_COLUMNS}
             (
-                o_url, o_host, o_depth, o_round, o_pos, o_code, o_status,
+                o_url, o_host, o_depth, o_round, o_lc, o_code, o_status,
                 o_ctype, o_group, o_error, o_dur, o_time, o_redir, o_links,
                 o_nlinks, o_norms, o_next, o_prev, o_struct, o_text,
                 o_data, o_vals, o_vrep, o_clinks,
@@ -287,9 +291,9 @@ def fetch_and_extract(
                 o_host.append(t.host)
                 o_depth.append(int(t.depth))
                 o_round.append(rn)
-                o_pos.append(int(t.batch_pos))
+                o_lc.append(int(t.link_count))
                 o_dur.append(synthetic_duration_us(url))
-                o_time.append(synthetic_time_us(rn, int(t.batch_pos)))
+                o_time.append(time_us)
                 o_redir.append(
                     [{"code": int(r["code"]), "url": r["url"]} for r in chain]
                 )
@@ -499,7 +503,6 @@ class Crawler:
         checkpoint_dir: str = "/tmp/walker_spark_ckpt",
         multi_host: bool = False,
         seeds: list[str] | None = None,
-        record_order: bool = False,
         scrape_func=None,
         validation_func=None,
         result_modifier=None,
@@ -526,7 +529,6 @@ class Crawler:
         self.io = make_table_io(spark, checkpoint_dir)
         self.multi_host = multi_host
         self.seeds = seeds if seeds is not None else conf.seed_urls()
-        self.record_order = record_order
         self.scrape_func = scrape_func
         self.validation_func = validation_func
         self.result_modifier = result_modifier
@@ -626,72 +628,75 @@ class Crawler:
         else:
             seeds_ok = [s for s in self.seeds if s not in set(forbidden)]
 
+        manifest = read_json(self._manifest_path()) if resume else None
+        if manifest is not None and manifest.get("format") != _CHECKPOINT_FORMAT:
+            # a manifest of another format (or none: older manifests
+            # carry no stamp) would mix result schemas or miss the
+            # directory map; fail loudly before anything is written
+            raise RuntimeError(
+                "incompatible checkpoint version: manifest at "
+                f"{self._manifest_path()} has format {manifest.get('format')}, "
+                f"not {_CHECKPOINT_FORMAT}; re-run without resume=True to "
+                "start a fresh crawl"
+            )
+
         # The redirect-map resolution and the seed-frontier write below
         # are independent one-time setup jobs; run the resolution on a
         # driver thread so the two overlap (§ overlap-independent-jobs —
         # same discipline as the per-round lineage write).
         redirect_t = None
         redirect_t_err: list[BaseException] = []
-        redirect_map = None
-        if self.redirect_edges is not None:
-            if not io.exists("redirect_map"):
-                from pyspark import InheritableThread
+        if self.redirect_edges is not None and not io.exists("redirect_map"):
+            from pyspark import InheritableThread
 
-                def _write_redirects():
-                    try:
-                        io.write(resolve_redirects(self.redirect_edges), "redirect_map")
-                    except BaseException as e:
-                        redirect_t_err.append(e)
+            def _write_redirects():
+                try:
+                    io.write(resolve_redirects(self.redirect_edges), "redirect_map")
+                except BaseException as e:
+                    redirect_t_err.append(e)
 
-                redirect_t = InheritableThread(target=_write_redirects)
-                redirect_t.start()
-            else:
-                redirect_map = io.read("redirect_map")
+            redirect_t = InheritableThread(target=_write_redirects)
+            redirect_t.start()
 
-        manifest = read_json(self._manifest_path()) if resume else None
         # north-rule canonical mode: the seen key is the canonical form
         # (a `canon` column carried through frontier/seen files).
         seen_key = "canon" if conf.canonical_seen else "url"
         fcols = FRONTIER_COLS + (["canon"] if conf.canonical_seen else [])
-        if manifest is not None:
-            if "frontier_dir" not in manifest or "seen_dirs" not in manifest:
-                # pre-fusion manifests (round/frontier_rows only) carry no
-                # directory map — resuming them silently would re-crawl or
-                # skip rounds; fail loudly instead of with a KeyError.
-                raise RuntimeError(
-                    "incompatible checkpoint version: manifest at "
-                    f"{self._manifest_path()} lacks frontier_dir/seen_dirs "
-                    "(written by an older walker_spark); re-run without "
-                    "resume=True to start a fresh crawl"
-                )
-            start_round = manifest["round"] + 1
-            seen_names = list(manifest["seen_dirs"])
-            frontier_dir = manifest["frontier_dir"]
-            frontier_n = io.row_count(frontier_dir)
-        else:
-            start_round = 0
-            self.seeds = seeds_ok
-            frontier_df = self._seed_frontier()
-            if conf.canonical_seen:
-                frontier_df = frontier_df.withColumn(
-                    "canon", _canonicalize_udf()(F.col("url"))
-                )
-            # the seed frontier doubles as the first seen delta — one
-            # write, one directory (a seen delta has frontier schema).
-            frontier_dir = "rounds/r=-0001/frontier"
-            io.write(frontier_df, frontier_dir)
-            seen_names = [frontier_dir]
-            frontier_n = io.row_count(frontier_dir)
-        self._trim_metrics(start_round)
-        frontier = (
-            io.read(frontier_dir).select(*fcols) if frontier_n > 0 else None
+        try:
+            if manifest is not None:
+                start_round = manifest["round"] + 1
+                seen_names = list(manifest["seen_dirs"])
+                frontier_dir = manifest["frontier_dir"]
+                frontier_n = io.row_count(frontier_dir)
+            else:
+                start_round = 0
+                self.seeds = seeds_ok
+                frontier_df = self._seed_frontier()
+                if conf.canonical_seen:
+                    frontier_df = frontier_df.withColumn(
+                        "canon", _canonicalize_udf()(F.col("url"))
+                    )
+                # the seed frontier doubles as the first seen delta — one
+                # write, one directory (a seen delta has frontier schema).
+                frontier_dir = "rounds/r=-0001/frontier"
+                io.write(frontier_df, frontier_dir)
+                seen_names = [frontier_dir]
+                frontier_n = io.row_count(frontier_dir)
+            self._trim_metrics(start_round)
+            frontier = (
+                io.read(frontier_dir).select(*fcols) if frontier_n > 0 else None
+            )
+            seen = io.read_many(seen_names).select(F.col(seen_key).alias("url"))
+        finally:
+            # a failed setup must not leave the writer running into the
+            # checkpoint that a resume is about to rewrite
+            if redirect_t is not None:
+                redirect_t.join()
+        if redirect_t_err:
+            raise redirect_t_err[0]
+        redirect_map = (
+            io.read("redirect_map") if self.redirect_edges is not None else None
         )
-        seen = io.read_many(seen_names).select(F.col(seen_key).alias("url"))
-        if redirect_t is not None:
-            redirect_t.join()
-            if redirect_t_err:
-                raise redirect_t_err[0]
-            redirect_map = io.read("redirect_map")
 
         r = start_round
         total_fetched = 0
@@ -700,7 +705,7 @@ class Crawler:
             rd = f"rounds/r={r:05d}"
 
             t0 = time.time()
-            batch = select_fetch_batch(frontier, conf.host_budget, self.record_order)
+            batch = select_fetch_batch(frontier, conf.host_budget)
             # When the whole frontier fits the per-host budget (each
             # host's rows ≤ total rows ≤ budget), the batch provably
             # equals the frontier: the leftover anti-join below is an
@@ -832,6 +837,7 @@ class Crawler:
             atomic_write_json(
                 self._manifest_path(),
                 {
+                    "format": _CHECKPOINT_FORMAT,
                     "round": r,
                     "frontier_dir": frontier_dir,
                     "frontier_rows": frontier_n,
@@ -945,13 +951,17 @@ class Crawler:
         return self.io.read_many(self._result_names())
 
     def order_df(self) -> DataFrame | None:
-        """The crawl order, ``(round, batch_pos, url)``, read from the
-        results (one row per batch row); ``batch_pos`` is set only with
-        ``record_order``. None before any round."""
+        """The crawl order, ``(round, batch_pos, url)``, derived from the
+        results (one row per batch row): within a round the batch is
+        fetched host ascending, then in politeness priority order, as the
+        reference dispatcher does. None before any round."""
         names = self._result_names()
         if not names:
             return None
-        return self.io.read_many(names).select("round", "batch_pos", "url")
+        w = Window.partitionBy("round").orderBy(F.col("host").asc(), *priority_order())
+        return self.io.read_many(names).select(
+            "round", (F.row_number().over(w) - 1).alias("batch_pos"), "url"
+        )
 
     def seen_df(self) -> DataFrame:
         manifest = read_json(self._manifest_path())
